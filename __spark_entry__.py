@@ -73,34 +73,34 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("props").alias("text"),
     )
     pts = R.raw_points(pages_like, metric=F.length("text").cast("double"))
-    t1m = R.rollup_from_points(pts, "1m", bin_mode="int")
+    t1m = R.rollup_from_points(pts, "1m")
     t1h = R.rollup_tier_up(t1m, "1h")
-    return R.tier_view(t1h, bin_mode="int")
+    return R.tier_view(t1h)
 
 
 # ---------------------------------------------------------------- queries
 
 
 def _q_rollup_1m(spark, sf_dir):
-    t1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m", bin_mode="int")
-    return R.tier_view(t1m, bin_mode="int").select(
+    t1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m")
+    return R.tier_view(t1m).select(
         F.col("url").alias("series_key"), _epoch(), "cnt", "vmin", "vmax", "vmean", "p95"
     )
 
 
 def _q_rollup_1h(spark, sf_dir):
     # deliberately via the re-aggregable tier-up path (1m state -> 1h)
-    t1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m", bin_mode="int")
+    t1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m")
     t1h = R.rollup_tier_up(t1m, "1h")
-    return R.tier_view(t1h, bin_mode="int").select(
+    return R.tier_view(t1h).select(
         F.col("url").alias("series_key"), _epoch(), "cnt", "vmin", "vmax", "vmean", "p95"
     )
 
 
 def _q_rollup_1d(spark, sf_dir):
-    t1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m", bin_mode="int")
+    t1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m")
     t1d = R.rollup_tier_up(R.rollup_tier_up(t1m, "1h"), "1d")
-    return R.tier_view(t1d, bin_mode="int").select(
+    return R.tier_view(t1d).select(
         F.col("url").alias("series_key"), _epoch(), "cnt", "vmin", "vmax", "vmean", "p95"
     )
 
@@ -119,8 +119,8 @@ def _rollup_oracle(unit: str) -> str:
 
 
 def _q_gapfill_ffill(spark, sf_dir):
-    t1h = R.rollup_from_points(_event_points(spark, sf_dir), "1h", bin_mode="int")
-    view = R.tier_view(t1h, bin_mode="int").select("url", "bucket_ts", "cnt")
+    t1h = R.rollup_from_points(_event_points(spark, sf_dir), "1h")
+    view = R.tier_view(t1h).select("url", "bucket_ts", "cnt")
     filled = G.densify_fill(
         view.withColumn("cntd", F.col("cnt").cast("double")),
         "1h",
@@ -149,8 +149,8 @@ _GAPFILL_FFILL_SQL = """
 
 
 def _q_gapfill_interp(spark, sf_dir):
-    t1h = R.rollup_from_points(_event_points(spark, sf_dir), "1h", bin_mode="int")
-    view = R.tier_view(t1h, bin_mode="int").select("url", "bucket_ts", "vmean")
+    t1h = R.rollup_from_points(_event_points(spark, sf_dir), "1h")
+    view = R.tier_view(t1h).select("url", "bucket_ts", "vmean")
     filled = G.densify_fill(view, "1h", value_cols=("vmean",), method="interp")
     return filled.select(
         F.col("url").alias("series_key"),
@@ -616,8 +616,8 @@ def _q_resample_fourier(spark, sf_dir):
     FFT kernel, not SQL-expressible -> rows-only check."""
     ev = _events(spark, sf_dir)
     # regularize: per event_type hourly mean series, then resample 2x
-    t1h = R.rollup_from_points(_event_points(spark, sf_dir), "1h", bin_mode="int")
-    view = R.tier_view(t1h, bin_mode="int").select("url", "bucket_ts", "vmean")
+    t1h = R.rollup_from_points(_event_points(spark, sf_dir), "1h")
+    view = R.tier_view(t1h).select("url", "bucket_ts", "vmean")
     series = G.densify_fill(view, "1h", ("vmean",), method="interp").select(
         F.col("url").alias("key"),
         F.unix_timestamp("bucket_ts").cast("double").alias("ts"),
@@ -631,8 +631,8 @@ def _q_beatlex_summarize(spark, sf_dir):
     rows-only check."""
     from spartan2_spark.models.beatlex import summarize
 
-    t1h = R.rollup_from_points(_event_points(spark, sf_dir), "1h", bin_mode="int")
-    view = R.tier_view(t1h, bin_mode="int").select("url", "bucket_ts", "vmean")
+    t1h = R.rollup_from_points(_event_points(spark, sf_dir), "1h")
+    view = R.tier_view(t1h).select("url", "bucket_ts", "vmean")
     series = G.densify_fill(view, "1h", ("vmean",), method="interp").select(
         F.col("url").alias("key"),
         F.unix_timestamp("bucket_ts").cast("double").alias("ts"),
@@ -6630,11 +6630,11 @@ def _q_gorilla_roundtrip(spark, sf_dir):
     from spartan2_spark.operators.gorilla import decode_blocks, encode_tier_blocks
 
     pts = _event_points(spark, sf_dir)
-    t1m = R.rollup_from_points(pts, "1m", bin_mode="int")
+    t1m = R.rollup_from_points(pts, "1m")
     # chunk fat series on aligned 4096-minute ranges so encode
     # parallelism scales with data volume, not url cardinality (chunks
     # don't overlap in time, so the decoded union is the same point set)
-    view = R.tier_view(t1m, bin_mode="int").withColumn(
+    view = R.tier_view(t1m).withColumn(
         "chunk", F.floor(F.unix_timestamp("bucket_ts") / (60 * 4096))
     )
     blocks = encode_tier_blocks(
@@ -6717,8 +6717,8 @@ def _q_gorilla_read_range(spark, sf_dir):
 
     t0, t1 = 1704844800, 1705708799  # 2024-01-10 .. 2024-01-20 (excl) UTC
     pts = _event_points(spark, sf_dir)
-    t1m = R.rollup_from_points(pts, "1m", bin_mode="int")
-    view = R.tier_view(t1m, bin_mode="int").withColumn(
+    t1m = R.rollup_from_points(pts, "1m")
+    view = R.tier_view(t1m).withColumn(
         "chunk", F.floor(F.unix_timestamp("bucket_ts") / (60 * 4096))
     )
     blocks = encode_tier_blocks(
@@ -7476,7 +7476,7 @@ def _q_bucket_coverage(spark, sf_dir):
     own [first, last] span — missing buckets are exactly the gap-fill
     serve-time workload. Span math is integer DIV on aligned bucket
     seconds; coverage is the single IEEE divide."""
-    s1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m", "int")
+    s1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m")
     return R.bucket_coverage(s1m, 60)
 
 
@@ -8276,7 +8276,7 @@ def _q_tier_audit(spark, sf_dir):
     everywhere — proven here against an independent engine), and
     points covered."""
     return R.consistency_audit(
-        _event_points(spark, sf_dir), "1m", "1h", bin_mode="int"
+        _event_points(spark, sf_dir), "1m", "1h"
     )
 
 
@@ -8491,7 +8491,7 @@ def _q_tier_mode(spark, sf_dir):
         F.col("ts"),
         F.round(F.col("value") * 100).alias("value"),
     )
-    s1m = R.rollup_from_points(pts, "1m", "int")
+    s1m = R.rollup_from_points(pts, "1m")
     s1h = R.rollup_tier_up(s1m, "1h")
     return R.tier_mode(s1h).select(
         "url",
@@ -10045,13 +10045,13 @@ def _q_tier_incremental_merge(spark, sf_dir):
     ever). Union + ONE scalar hash aggregation."""
     pts = _event_points(spark, sf_dir)
     stored = R.rollup_from_points(
-        pts.filter(F.dayofmonth("ts") <= 20), "1h", bin_mode="int"
+        pts.filter(F.dayofmonth("ts") <= 20), "1h"
     )
     late = R.rollup_from_points(
-        pts.filter(F.dayofmonth("ts") > 20), "1h", bin_mode="int"
+        pts.filter(F.dayofmonth("ts") > 20), "1h"
     )
     merged = R.tier_merge(stored, late)
-    return R.tier_view(merged, bin_mode="int").select(
+    return R.tier_view(merged).select(
         F.col("url").alias("series_key"), _epoch(), "cnt", "vmin", "vmax",
         "vmean", "p95",
     )
@@ -10218,11 +10218,11 @@ def _q_rollup_1w(spark, sf_dir):
     north-rule chain one hop; the DuckDB twin computes the week
     rollup directly from raw, so twin equality proves the THREE-hop
     tier-up is still exact."""
-    t1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m", bin_mode="int")
+    t1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m")
     t1w = R.rollup_tier_up(
         R.rollup_tier_up(R.rollup_tier_up(t1m, "1h"), "1d"), "1w"
     )
-    return R.tier_view(t1w, bin_mode="int").select(
+    return R.tier_view(t1w).select(
         F.col("url").alias("series_key"), _epoch(), "cnt", "vmin", "vmax",
         "vmean", "p95",
     )
@@ -10824,7 +10824,7 @@ def _q_week_over_week(spark, sf_dir):
     IEEE ratio — the report the long-retention tier exists for."""
     from spartan2_spark.operators.timeseries import week_over_week
 
-    t1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m", bin_mode="int")
+    t1m = R.rollup_from_points(_event_points(spark, sf_dir), "1m")
     t1w = R.rollup_tier_up(
         R.rollup_tier_up(R.rollup_tier_up(t1m, "1h"), "1d"), "1w"
     )

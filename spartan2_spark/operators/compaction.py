@@ -124,45 +124,17 @@ def compaction_plan(
     any engine.
 
     Scale: the cumsum is NOT a per-partition-key window (a single tier
-    at 10^12 rows would serialize onto one reducer). Same two-phase
-    scheme as ``global_row_numbers``: range-repartition on
-    (part, order) — order-preserving across tasks — local cumsum per
-    task, then broadcast per-(task, part) offsets (a window over the
-    tiny task-count relation). One range shuffle + one broadcast join.
+    at 10^12 rows would serialize onto one reducer); it is the
+    distributed ``partitioning.ordered_prefix_sum`` over (part, order)
+    — one range shuffle + one broadcast join.
     """
-    from pyspark.sql import Window as W
+    from spartan2_spark.operators.partitioning import ordered_prefix_sum
 
-    cols = [F.col(c) for c in (*part_cols, *order_cols)]
-    ranged = df.repartitionByRange(*cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w_local = W.partitionBy("__pid", *part_cols).orderBy(*order_cols)
-    local = ranged.withColumn(
-        "__lc",
-        F.sum(bytes_col).over(w_local.rowsBetween(W.unboundedPreceding, 0)),
-    )
-    offsets = (
-        ranged.groupBy("__pid", *part_cols)
-        .agg(F.sum(bytes_col).alias("__n"))
-        .withColumn(
-            "__off",
-            F.coalesce(
-                F.sum("__n").over(
-                    W.partitionBy(*part_cols)
-                    .orderBy("__pid")
-                    .rowsBetween(W.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("__pid", *part_cols, "__off")
-    )
-    cum = local.join(F.broadcast(offsets), ["__pid", *part_cols]).withColumn(
+    cum = ordered_prefix_sum(
+        df, order_cols, part_cols, weight_col=bytes_col, out_col="__cum"
+    ).withColumn(
         "__grp",
-        F.floor(
-            (F.col("__off") + F.col("__lc") - F.col(bytes_col))
-            / F.lit(target_bytes)
-        ),
+        F.floor((F.col("__cum") - F.col(bytes_col)) / F.lit(target_bytes)),
     )
     return (
         cum.groupBy(*part_cols, F.col("__grp").alias("grp"))

@@ -49,9 +49,7 @@ def batched_group_apply(
     kernel: Callable[[pd.DataFrame], pd.DataFrame],
     schema,
     order: Sequence[str] = (),
-    num_partitions: int | None = None,
     whole_batch: bool = False,
-    assume_partitioned: bool = False,
 ) -> DataFrame:
     """groupBy(*keys).applyInPandas(kernel, schema), amortized.
 
@@ -72,16 +70,7 @@ def batched_group_apply(
     """
     keys = list(keys)
     order = [c for c in order if c]
-    if assume_partitioned:
-        # caller guarantees each group already lives in one partition
-        # (bucketed tier table, upstream repartition on the same keys):
-        # skip the exchange — the storage layout IS the shuffle
-        rep = df
-    elif num_partitions is None:
-        rep = df.repartition(*keys)
-    else:
-        rep = df.repartition(num_partitions, *keys)
-    srt = rep.sortWithinPartitions(*keys, *order)
+    srt = df.repartition(*keys).sortWithinPartitions(*keys, *order)
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None

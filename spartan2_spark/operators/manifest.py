@@ -13,9 +13,11 @@ be byte-audited; ``input_snapshot`` pins the upstream table version the
 partition was computed from (the Iceberg snapshot-id analogue — the
 sandbox table layer is a parquet directory with a version file).
 
-Resume: ``pending_partitions`` anti-joins the stage's completed dts, so
-a killed job recomputes only missing dates — the north rule's
-"resumes mid-tier without recomputation".
+Resume: ``completed_partitions`` names the stage's valid dts; a
+resumed stage filters them out of its input before any compute, so a
+killed job recomputes only missing dates — the north rule's "resumes
+mid-tier without recomputation". ``write_manifest`` is the one writer
+of the manifest file.
 """
 
 from __future__ import annotations
@@ -34,9 +36,9 @@ __all__ = [
     "stage_manifest_path",
     "read_manifest",
     "completed_partitions",
+    "write_manifest",
     "write_partition_entries",
     "partition_lineage",
-    "pending_partitions",
 ]
 
 
@@ -82,6 +84,15 @@ def read_manifest(root: str, stage: str) -> list[dict]:
         return []
     with open(p) as f:
         return json.load(f)
+
+
+def write_manifest(root: str, stage: str, entries: list[dict]) -> None:
+    """Replace the stage manifest with ``entries``, sorted by dt,
+    atomically."""
+    _atomic_write(
+        stage_manifest_path(root, stage),
+        json.dumps(sorted(entries, key=lambda x: x["dt"]), indent=0),
+    )
 
 
 def upstream_crcs(root: str, src_stage: str) -> dict[str, int]:
@@ -139,12 +150,12 @@ def write_partition_entries(
     (last-writer-wins per dt), atomically.
 
     ``replace=True`` drops every existing entry first — the manifest
-    becomes exactly ``entries``. Used by all-or-nothing stages (t1w,
+    becomes exactly ``entries``. Used by full-rebuild stages (t1w,
     gapfill_1h) after a static-overwrite rebuild: the rebuild's output
     IS the whole table, so entries for dts the rebuild did not produce
     describe partitions that no longer exist and must not survive the
-    merge (a merged orphan entry would later be re-stamped with the new
-    upstream fingerprint and laundered back into the valid set)."""
+    merge (a merged orphan entry would be stamped with the new upstream
+    fingerprint and laundered back into the valid set)."""
     now = time.time()
     merged = {} if replace else {e["dt"]: e for e in read_manifest(root, stage)}
     for e in entries:
@@ -155,10 +166,7 @@ def write_partition_entries(
             e["input_crc"] = input_crcs.get(e["dt"])
         e["written_at"] = now
         merged[e["dt"]] = e
-    _atomic_write(
-        stage_manifest_path(root, stage),
-        json.dumps(sorted(merged.values(), key=lambda x: x["dt"]), indent=0),
-    )
+    write_manifest(root, stage, list(merged.values()))
 
 
 def partition_sizes(table_dir: str) -> dict[str, dict]:
@@ -195,18 +203,6 @@ def partition_lineage(df: DataFrame, dt_col="dt") -> list[dict]:
     ]
 
 
-def pending_partitions(
-    df: DataFrame, root: str, stage: str, input_snapshot: int, dt_col="dt"
-) -> DataFrame:
-    """Filter the stage input down to partitions NOT yet in the manifest
-    (the resume anti-join; a literal IN-list keeps it a pushed-down scan
-    predicate rather than a join, since the completed set is per-date)."""
-    done = completed_partitions(root, stage, input_snapshot)
-    if not done:
-        return df
-    return df.filter(~F.col(dt_col).cast("string").isin(sorted(done)))
-
-
 def snapshot_diff(
     snap_a: DataFrame,
     snap_b: DataFrame,
@@ -216,7 +212,7 @@ def snapshot_diff(
 ) -> DataFrame:
     """Iceberg-style snapshot diff over two partition manifests — the
     DataFrame twin of the file-manifest resume logic above
-    (``pending_partitions``): classify every partition as ``added``
+    (``completed_partitions``): classify every partition as ``added``
     (only in B), ``removed`` (only in A), ``changed`` (present in both
     with a different row count or content CRC) or ``same``, and emit
     the exact row delta. This is what an incremental tier rebuild

@@ -26,6 +26,7 @@ __all__ = [
     "salted_repartition",
     "range_partition_by_ts",
     "global_dense_ids",
+    "ordered_prefix_sum",
     "global_row_numbers",
     "write_bucketed",
     "zorder_key",
@@ -97,77 +98,100 @@ def global_dense_ids(
     df: DataFrame,
     key_col: str,
     id_col: str = "id",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """0-based dense ids in global ``key_col`` sort order WITHOUT a
     single-partition window (``row_number().over(Window.orderBy(k))``
     moves every row to one task — fine at 10^4 keys, fatal at 10^9).
 
-    Three distributed steps: range-repartition on the key (preserves
-    global order across partitions), per-partition local ``row_number``
-    (window partitioned by ``spark_partition_id``), then add broadcast
-    per-partition offsets (a cumulative sum over the tiny
-    partition-count relation). The output ids depend only on the global
-    key order — identical at any parallelism or range boundaries.
+    The ids are a row-count :func:`ordered_prefix_sum` over the key, so
+    they depend only on the global key order — identical at any
+    parallelism or range boundaries.
 
     ``df`` must be unique on ``key_col`` (callers pass a ``distinct()``
     dimension).
     """
-    return global_row_numbers(df, [F.col(key_col)], id_col, num_partitions, base=0)
+    return global_row_numbers(df, [F.col(key_col)], id_col, base=0)
+
+
+def ordered_prefix_sum(
+    df: DataFrame,
+    order_cols: list,
+    part_cols: tuple[str, ...] | list[str] = (),
+    weight_col: str | None = None,
+    out_col: str = "__cum",
+) -> DataFrame:
+    """Distributed inclusive running sum of ``weight_col`` (row count
+    when None) within each ``part_cols`` group, in ``order_cols`` order
+    (callers pass a total order, e.g. a unique-key tie-break) — without
+    a per-group or global single-partition window, which would move a
+    mega-group's rows onto one task.
+
+    Two phases over one range repartition on (part, order), which keeps
+    the order across tasks: a local running sum per (task, part), and
+    per-(task, part) offsets — a window over the tiny task-count
+    relation, broadcast back. The result depends only on the order, not
+    on where the range boundaries fall.
+
+    The ranged relation, ``spark_partition_id`` attached, is pinned with
+    ``barrier`` before its two consumers read it: range bounds come
+    from a sample of the input, and a re-evaluated (unreused) exchange
+    may draw different bounds, pairing one evaluation's local sums with
+    another's offsets. The offsets window runs UNPARTITIONED over the
+    partition-count relation on purpose; WindowExec's "No Partition
+    Defined" warning for it is expected and harmless.
+    """
+    from spartan2_spark.operators.barrier import barrier
+
+    part_cols = list(part_cols)
+    keys = [*part_cols, *order_cols]
+    ranged = barrier(
+        df.repartitionByRange(*keys).withColumn("__pid", F.spark_partition_id())
+    )
+    weight = F.lit(1).cast("long") if weight_col is None else F.col(weight_col)
+    local = ranged.withColumn(
+        "__local",
+        F.sum(weight).over(
+            W.partitionBy("__pid", *part_cols)
+            .orderBy(*order_cols)
+            .rowsBetween(W.unboundedPreceding, 0)
+        ),
+    )
+    offsets = (
+        ranged.groupBy("__pid", *part_cols)
+        .agg(F.sum(weight).alias("__n"))
+        .withColumn(
+            "__off",
+            F.coalesce(
+                F.sum("__n").over(
+                    W.partitionBy(*part_cols)
+                    .orderBy("__pid")
+                    .rowsBetween(W.unboundedPreceding, -1)
+                ),
+                F.lit(0),
+            ),
+        )
+        .select("__pid", *part_cols, "__off")
+    )
+    return (
+        local.join(F.broadcast(offsets), ["__pid", *part_cols])
+        .withColumn(out_col, F.col("__off") + F.col("__local"))
+        .drop("__pid", "__local", "__off")
+    )
 
 
 def global_row_numbers(
     df: DataFrame,
     order_cols: list,
     id_col: str = "rn",
-    num_partitions: int | None = None,
     base: int = 1,
 ) -> DataFrame:
     """Distributed ``row_number() OVER (ORDER BY order_cols)`` (callers
-    pass a total order, e.g. a unique-key tie-break): range-repartition
-    on the order columns (preserves global order across partitions),
-    number locally per partition, add broadcast cumulative offsets.
-    ``base`` 1 = SQL row_number, 0 = dense 0-based ids. The ids depend
-    only on the global order, not on range boundary placement.
-
-    The offsets cumsum below runs an UNPARTITIONED window on purpose —
-    over the partition-count relation (one row per shuffle partition,
-    i.e. tens to thousands of rows at any data scale), not over the
-    data. WindowExec's "No Partition Defined" warning for it is
-    expected and harmless.
-    """
-    from pyspark.sql import Window as W
-
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        if num_partitions
-        else df.repartitionByRange(*order_cols)
-    ).withColumn("__pid", F.spark_partition_id())
-    local = ranged.withColumn(
-        "__local",
-        F.row_number().over(W.partitionBy("__pid").orderBy(*order_cols)),
-    )
-    offsets = (
-        ranged.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .withColumn(
-            "__offset",
-            F.coalesce(
-                F.sum("__n").over(
-                    W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("__pid", "__offset")
-    )
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(
-            id_col,
-            (F.col("__offset") + F.col("__local") - 1 + F.lit(base)).cast("long"),
-        )
-        .drop("__pid", "__local", "__offset")
+    pass a total order, e.g. a unique-key tie-break): the row-count
+    :func:`ordered_prefix_sum`. ``base`` 1 = SQL row_number, 0 = dense
+    0-based ids. The ids depend only on the global order, not on range
+    boundary placement."""
+    return ordered_prefix_sum(df, order_cols, out_col=id_col).withColumn(
+        id_col, (F.col(id_col) + F.lit(base - 1)).cast("long")
     )
 
 
@@ -438,11 +462,10 @@ def source_mix_sample(
     output's per-stratum counts).
 
     Scale: ranking within a stratum is NOT a per-stratum window (a
-    mega-stratum would serialize onto one reducer). Rows get a global
-    rank via `global_row_numbers` ordered by (stratum, hash, key) —
-    range-repartitioned, order-preserving — and the per-stratum rank is
-    the global rank minus the stratum's min rank (one tiny broadcast
-    aggregate). One range shuffle + one broadcast join total.
+    mega-stratum would serialize onto one reducer). The per-stratum
+    rank is a row-count :func:`ordered_prefix_sum` with the stratum as
+    its partition column, ordered by (hash, key): one range shuffle +
+    one broadcast join.
     """
     quotas = allocate_quotas(weights, total)
     q_items = sorted(quotas.items())
@@ -455,14 +478,11 @@ def source_mix_sample(
     ).withColumn(
         "__h", F.md5(F.concat_ws(":", F.col(strata_col), F.col(key_col)))
     )
-    ranked = global_row_numbers(
-        hashed, [strata_col, "__h", key_col], id_col="__rn"
+    ranked = ordered_prefix_sum(
+        hashed, ["__h", key_col], part_cols=[strata_col], out_col="rank"
     )
-    base = ranked.groupBy(strata_col).agg(F.min("__rn").alias("__base"))
     return (
-        ranked.join(F.broadcast(base), strata_col)
-        .withColumn("rank", (F.col("__rn") - F.col("__base") + 1))
-        .join(qdf, strata_col)
+        ranked.join(qdf, strata_col)
         .filter(F.col("rank") <= F.col("__quota"))
         .select(strata_col, key_col, "rank")
     )

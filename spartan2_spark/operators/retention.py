@@ -155,10 +155,7 @@ def apply_retention(
             # resumed pipeline would trust
             for e in to_expire:
                 e["expired_at"] = now
-            M._atomic_write(
-                M.stage_manifest_path(out_root, stage),
-                json.dumps(sorted(entries, key=lambda x: x["dt"]), indent=0),
-            )
+            M.write_manifest(out_root, stage, entries)
             M.bump_table_version(os.path.join(out_root, stage))
             for e in to_expire:
                 part_dir = os.path.join(out_root, stage, f"dt={e['dt']}")

@@ -16,9 +16,8 @@ relationally instead of as an array column: ``bin`` is a deterministic
 pure function of the value (no data-dependent centroids), so the merge
 is **commutative and associative** — tier values are bit-identical at
 any parallelism level (local[8] == local[32]) with no ordering
-discipline needed. For integer metrics (the default rollup metric
-x = length(text)) and fixed-point metrics the quantile is EXACT; for
-generic doubles a signed log-bin bounds relative error at ~0.1%. This
+discipline needed. For the integer metrics the ladder rolls up (the
+default rollup metric x = length(text)) the quantile is EXACT. This
 is a deliberate departure from a classic t-digest, whose merge is
 order-sensitive; a t-digest is still provided in
 ``spartan2_spark.functions.sketches`` for parity experiments.
@@ -95,49 +94,16 @@ def _tier_order() -> dict:
     """name -> coarsening rank, derived from TIERS insertion order."""
     return {t: i for i, t in enumerate(TIERS)}
 
-_LOG_SCALE = 693.0  # bins per e-fold => ~0.144% max relative bin error
+
+def bin_col(value: Column) -> Column:
+    """Deterministic value -> long bin: the value itself, exact for the
+    integer-valued metrics the ladder rolls up (length(text))."""
+    return value.cast("long")
 
 
-def bin_col(value: Column, mode: str = "int") -> Column:
-    """Deterministic value -> long bin. Modes:
-
-    - ``int``:   exact for integer-valued metrics (bin == value)
-    - ``centi``: exact for 2-decimal fixed-point metrics (bin == round(100v))
-    - ``log``:   signed log bin, ~0.1% relative error, any double
-    """
-    if mode == "int":
-        return value.cast("long")
-    if mode == "centi":
-        return F.round(value * 100).cast("long")
-    if mode == "log":
-        # |log(|v|)|*SCALE < ~491k for any double, so the signed offset
-        # encoding below never collides: positives land in (+1.5M, +2.5M),
-        # negatives in (-2.5M, -1.5M), zero at 0. Bin order == value order.
-        mag = F.floor(F.log(F.abs(value) + F.lit(1e-300)) * F.lit(_LOG_SCALE)).cast("long")
-        return (
-            F.when(value > 0, mag + F.lit(2_000_000))
-            .when(value < 0, -(mag + F.lit(2_000_000)) - F.lit(1))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    raise ValueError(f"unknown bin mode {mode!r}")
-
-
-def unbin_col(bin_: Column, mode: str = "int") -> Column:
-    """Bin -> representative double (bin midpoint family)."""
-    if mode == "int":
-        return bin_.cast("double")
-    if mode == "centi":
-        return bin_.cast("double") / 100.0
-    if mode == "log":
-        pos = F.exp(((bin_ - F.lit(2_000_000)).cast("double") + 0.5) / _LOG_SCALE)
-        negmag = ((-bin_ - F.lit(1)) - F.lit(2_000_000)).cast("double")
-        neg = -F.exp((negmag + 0.5) / _LOG_SCALE)
-        return (
-            F.when(bin_ > 1_000_000, pos)
-            .when(bin_ < -1_000_000, neg)
-            .otherwise(F.lit(0.0))
-        )
-    raise ValueError(f"unknown bin mode {mode!r}")
+def unbin_col(bin_: Column) -> Column:
+    """Bin -> representative double."""
+    return bin_.cast("double")
 
 
 def canonical_text(pages: DataFrame) -> DataFrame:
@@ -177,9 +143,7 @@ def raw_points(pages: DataFrame, metric: Column | None = None) -> DataFrame:
     )
 
 
-def rollup_from_points(
-    points: DataFrame, tier: str = "1m", bin_mode: str = "int"
-) -> DataFrame:
+def rollup_from_points(points: DataFrame, tier: str = "1m") -> DataFrame:
     """raw -> first tier (long-format state). ONE hash aggregation:
     Scan -> partial HashAgg(url,bucket,bin) -> shuffle -> final HashAgg,
     entirely scalar, entirely inside whole-stage codegen.
@@ -189,7 +153,7 @@ def rollup_from_points(
         "url",
         F.date_trunc(unit, F.col("ts")).alias("bucket_ts"),
         F.col("value"),
-        bin_col(F.col("value"), bin_mode).alias("bin"),
+        bin_col(F.col("value")).alias("bin"),
     )
     # drop null metrics (e.g. a crawl row with NULL text under the
     # default length(text) metric) before aggregating: counting them
@@ -227,13 +191,11 @@ def rollup_tier_up(state: DataFrame, tier: str) -> DataFrame:
     )
 
 
-def p95_from_hist(
-    hist: Column, cnt: Column, q: float = 0.95, bin_mode: str = "int"
-) -> Column:
+def p95_from_hist(hist: Column, cnt: Column, q: float = 0.95) -> Column:
     """Nearest-rank quantile from the sorted sparse histogram, evaluated
     with a single higher-order ``aggregate`` expression (JVM-side, no
     UDF): the smallest bin whose cumulative count reaches ceil(q*cnt).
-    Matches DuckDB ``quantile_disc`` semantics for exact bin modes.
+    Matches DuckDB ``quantile_disc`` semantics.
     """
     target = F.ceil(F.lit(q) * cnt.cast("double")).cast("long")
     picked = F.aggregate(
@@ -250,10 +212,10 @@ def p95_from_hist(
         ),
         lambda acc: acc["res"],
     )
-    return unbin_col(picked, bin_mode)
+    return unbin_col(picked)
 
 
-def tier_view(state: DataFrame, q: float = 0.95, bin_mode: str = "int") -> DataFrame:
+def tier_view(state: DataFrame, q: float = 0.95) -> DataFrame:
     """Finalize reader-facing aggregates from long-format state: one
     agg collapses the per-bin rows to one row per (url, bucket) — the
     sparse histogram becomes an array only HERE, at the read edge.
@@ -274,7 +236,7 @@ def tier_view(state: DataFrame, q: float = 0.95, bin_mode: str = "int") -> DataF
         "vmin",
         "vmax",
         (F.col("vsum") / F.col("cnt")).alias("vmean"),
-        p95_from_hist(F.col("vhist"), F.col("cnt"), q, bin_mode).alias("p95"),
+        p95_from_hist(F.col("vhist"), F.col("cnt"), q).alias("p95"),
     )
 
 
@@ -468,7 +430,6 @@ def purge_plan(
     points: DataFrame,
     forget: Column,
     tiers: tuple[str, ...] = ("1m", "1h", "1d"),
-    bin_mode: str = "int",
 ) -> DataFrame:
     """Right-to-be-forgotten work-list across retention tiers: for the
     urls marked by the ``forget`` predicate, one row per (tier, url)
@@ -493,7 +454,7 @@ def purge_plan(
     semi-join the points upstream for large ones; the tier math is
     unchanged either way.
     """
-    state = rollup_from_points(points.filter(forget), tiers[0], bin_mode)
+    state = rollup_from_points(points.filter(forget), tiers[0])
     out = None
     for i, tier in enumerate(tiers):
         if i > 0:
@@ -525,7 +486,6 @@ def consistency_audit(
     points: DataFrame,
     from_tier: str = "1m",
     to_tier: str = "1h",
-    bin_mode: str = "int",
 ) -> DataFrame:
     """Continuous-aggregate re-aggregability audit: recompute the
     coarse tier DIRECTLY from raw points and TIERED-UP from the fine
@@ -546,10 +506,8 @@ def consistency_audit(
     Scale-safe: audit cost ~ 2x the rollup itself, run per dt-partition
     in practice.
     """
-    direct = rollup_from_points(points, to_tier, bin_mode)
-    tiered = rollup_tier_up(
-        rollup_from_points(points, from_tier, bin_mode), to_tier
-    )
+    direct = rollup_from_points(points, to_tier)
+    tiered = rollup_tier_up(rollup_from_points(points, from_tier), to_tier)
     d, t = direct.alias("d"), tiered.alias("t")
     j = d.join(t, on=["url", "bucket_ts", "bin"], how="full_outer")
     agree = (
@@ -674,7 +632,6 @@ def tier_freshness(
 def tier_serving_plan(
     points: DataFrame,
     eps: float = 50.0,
-    bin_mode: str = "int",
 ) -> DataFrame:
     """Error-budget tier selection — "serve each url from the COARSEST
     retention tier that stays inside the error budget": a tier's
@@ -687,7 +644,7 @@ def tier_serving_plan(
     to touch 1/1440th of the data when the series is smooth enough.
 
     Exactness: spreads are max/min aggregates of the (exact) metric —
-    integral for int/centi-quantized metrics — and the tier pick is a
+    integral for integer metrics — and the tier pick is a
     pure threshold CASE; no floats beyond the metric itself.
 
     Plan shape: the 1m state is aggregated ONCE from raw, coarser
@@ -696,7 +653,7 @@ def tier_serving_plan(
     shuffles keyed on url — and the three 1-row-per-url branches join
     on url. Cost is O(|state|), not O(|points|), past the first hop.
     """
-    s1m = rollup_from_points(points, "1m", bin_mode)
+    s1m = rollup_from_points(points, "1m")
     s1h = rollup_tier_up(s1m, "1h")
     s1d = rollup_tier_up(s1h, "1d")
 
@@ -727,7 +684,7 @@ def tier_serving_plan(
     )
 
 
-def tier_mode(state: DataFrame, bin_mode: str = "int") -> DataFrame:
+def tier_mode(state: DataFrame) -> DataFrame:
     """Serve the per-bucket MODE from tier state without touching raw:
     the long-format sparse histogram already holds (bin, cnt) rows, so
     the most frequent value per (url, bucket) is one scalar hash
@@ -738,8 +695,7 @@ def tier_mode(state: DataFrame, bin_mode: str = "int") -> DataFrame:
     typical page size this hour", served from 1/1440th of the data.
 
     Exactness: counts and bins are BIGINT; only the closing
-    representative ``mode_value`` goes through the bin midpoint
-    (exact for int/centi modes).
+    representative ``mode_value`` goes through ``unbin_col`` (exact).
 
     Plan shape: ONE hash aggregate on (url, bucket_ts) — partial
     map-side combine applies, no window, no join, single shuffle.
@@ -759,7 +715,7 @@ def tier_mode(state: DataFrame, bin_mode: str = "int") -> DataFrame:
             "cnt_total",
             (-F.col("__m.nb")).cast("long").alias("mode_bin"),
             F.col("__m.c").cast("long").alias("mode_cnt"),
-            unbin_col(-F.col("__m.nb"), bin_mode).alias("mode_value"),
+            unbin_col(-F.col("__m.nb")).alias("mode_value"),
         )
     )
 
@@ -1379,8 +1335,7 @@ def cache_admission_plan(
 
 
 def tier_amplification_audit(
-    points: DataFrame, tiers: tuple[str, ...] = ("1m", "1h", "1d", "1w"),
-    bin_mode: str = "int",
+    points: DataFrame, tiers: tuple[str, ...] = ("1m", "1h", "1d", "1w")
 ) -> DataFrame:
     """Storage-amplification audit of the tier ladder: state rows per
     tier versus raw points, as exact ppm ratios — the number that
@@ -1405,7 +1360,7 @@ def tier_amplification_audit(
     order = _tier_order()
     for t in tiers:
         if prev_order is None:
-            state = rollup_from_points(points, t, bin_mode=bin_mode)
+            state = rollup_from_points(points, t)
         else:
             if order[t] <= prev_order:
                 raise ValueError("tiers must be strictly coarsening")

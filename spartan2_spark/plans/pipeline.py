@@ -25,8 +25,10 @@ Resume contract (two layers):
 
 Tier dts are self-contained (a minute/hour/day bucket never spans a
 calendar date), which is what makes the date the correct resume unit.
-The gap-fill stage interpolates ACROSS dates, so it is all-or-nothing:
-it pins a global fingerprint of the whole upstream manifest instead.
+The gap-fill stage interpolates ACROSS dates (and the opt-in week tier
+spans seven dates), so each is a full rebuild: it pins a fingerprint
+of the whole upstream manifest instead, and is skipped or rebuilt as a
+whole.
 
 Run via ``spark-submit --py-files spartan2_spark.zip`` on a cluster;
 locally the same entry point drives local[N].
@@ -49,6 +51,12 @@ from spartan2_spark.operators import rollup as R
 __all__ = ["run_pipeline"]
 
 
+def _fingerprint(crcs: dict[str, int]) -> int:
+    """One crc over a whole dt -> crc map: the lineage token of a stage
+    whose every output partition depends on every input partition."""
+    return zlib.crc32(";".join(f"{d}={c}" for d, c in sorted(crcs.items())).encode())
+
+
 def _run_stage(
     spark: SparkSession,
     out_root: str,
@@ -59,18 +67,20 @@ def _run_stage(
     input_snapshot: int,
     resume: bool,
     upstream: dict[str, int] | None = None,
-    all_or_nothing: bool = False,
+    fingerprint: int | None = None,
 ) -> dict:
     """Stage protocol: resume-prune input -> build -> dynamic-overwrite
     write -> per-partition lineage -> manifest merge -> version bump.
 
-    ``all_or_nothing=True`` is the full-rebuild protocol (t1w,
-    gapfill_1h): the build's output IS the whole table, so the write
-    uses STATIC partition overwrite (the stage dir is wiped — orphan
-    partitions from a previous, larger upstream cannot survive a
-    retention trim) and the manifest is REPLACED with exactly the
-    produced dts rather than merged. Incompatible with resume pruning
-    (the caller decides staleness via a global fingerprint instead).
+    With ``fingerprint`` set the stage is a full rebuild (t1w,
+    gapfill_1h): every output partition depends on every input
+    partition, so the stage is skipped whole when every manifest entry
+    already carries that fingerprint as its ``input_crc``. Otherwise
+    the build's output IS the whole table: the write uses STATIC
+    partition overwrite (the stage dir is wiped — orphan partitions
+    from a previous, larger upstream cannot survive a retention trim)
+    and the manifest is REPLACED with exactly the produced dts, each
+    pinned to the fingerprint.
 
     Metrics: each manifest entry additionally records the partition's
     physical bytes + file count at write time, and the stage report
@@ -78,51 +88,56 @@ def _run_stage(
     rule pairs with lineage."""
     import time as _time
 
-    if all_or_nothing and resume:
-        raise ValueError(
-            "all_or_nothing stages cannot resume-prune: validity is "
-            "decided by the caller's global fingerprint"
-        )
     t_start = _time.time()
     out_dir = os.path.join(out_root, stage)
-    # with crc lineage chaining the snapshot pin is redundant (and would
-    # over-invalidate: an upstream rewrite that reproduced identical
-    # bytes bumps the version but not the crc) — crc decides alone.
-    snap_check = None if upstream is not None else input_snapshot
-    done = (
-        M.completed_partitions(out_root, stage, snap_check, upstream)
-        if resume
-        else set()
-    )
+    entries: list[dict] = []
+    if fingerprint is None:
+        # with crc lineage chaining the snapshot pin is redundant (and
+        # would over-invalidate: an upstream rewrite that reproduced
+        # identical bytes bumps the version but not the crc) — crc
+        # decides alone.
+        snap_check = None if upstream is not None else input_snapshot
+        done = (
+            M.completed_partitions(out_root, stage, snap_check, upstream)
+            if resume
+            else set()
+        )
+    else:
+        # a full rebuild is current as a whole or not at all
+        man = M.read_manifest(out_root, stage) if resume else []
+        current = bool(man) and all(e.get("input_crc") == fingerprint for e in man)
+        done = {e["dt"] for e in man} if current else set()
 
     def not_done(df: DataFrame, col) -> DataFrame:
         return df.filter(~col.cast("string").isin(sorted(done))) if done else df
 
-    out_df = build(not_done(input_df, input_dt_col))
-    spark.conf.set(
-        "spark.sql.sources.partitionOverwriteMode",
-        "static" if all_or_nothing else "dynamic",
-    )
-    out_df.write.mode("overwrite").partitionBy("dt").parquet(out_dir)
+    if fingerprint is None or not done:
+        out_df = build(not_done(input_df, input_dt_col))
+        spark.conf.set(
+            "spark.sql.sources.partitionOverwriteMode",
+            "dynamic" if fingerprint is None else "static",
+        )
+        out_df.write.mode("overwrite").partitionBy("dt").parquet(out_dir)
 
-    written = spark.read.parquet(out_dir)
-    new = not_done(written, F.col("dt"))
-    if upstream:
-        # a dt on disk but absent from the upstream lineage was NOT
-        # rewritten by this run (dynamic overwrite only touches dts the
-        # build produced) — it is stale, and stamping it with the new
-        # input lineage would launder it into the manifest as current.
-        # Leave it unstamped (and invalid) until a retention policy or
-        # upstream repair deals with it.
-        new = new.filter(F.col("dt").cast("string").isin(sorted(upstream)))
-    entries = M.partition_lineage(new)
-    sizes = M.partition_sizes(out_dir)
-    for e in entries:
-        e.update(sizes.get(e["dt"], {}))
-    M.write_partition_entries(
-        out_root, stage, entries, input_snapshot, upstream,
-        replace=all_or_nothing,
-    )
+        written = spark.read.parquet(out_dir)
+        new = not_done(written, F.col("dt"))
+        if upstream:
+            # a dt on disk but absent from the upstream lineage was NOT
+            # rewritten by this run (dynamic overwrite only touches dts
+            # the build produced) — it is stale, and stamping it with the
+            # new input lineage would launder it into the manifest as
+            # current. Leave it unstamped (and invalid) until a retention
+            # policy or upstream repair deals with it.
+            new = new.filter(F.col("dt").cast("string").isin(sorted(upstream)))
+        entries = M.partition_lineage(new)
+        sizes = M.partition_sizes(out_dir)
+        for e in entries:
+            e.update(sizes.get(e["dt"], {}))
+        pins = upstream if fingerprint is None else {e["dt"]: fingerprint for e in entries}
+        M.write_partition_entries(
+            out_root, stage, entries, input_snapshot, pins,
+            replace=fingerprint is not None,
+        )
     # snapshot semantics: a run that added no partitions is not a new
     # snapshot (otherwise downstream version pins would churn on no-ops)
     version = M.bump_table_version(out_dir) if entries else M.table_version(out_dir)
@@ -137,18 +152,11 @@ def _run_stage(
     }
 
 
-def _global_fingerprint(root: str, src_stage: str) -> int:
-    man = M.read_manifest(root, src_stage)
-    s = ";".join(f"{e['dt']}={e['value_crc']}" for e in man)
-    return zlib.crc32(s.encode())
-
-
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     out_root: str,
     resume: bool = True,
-    bin_mode: str = "int",
     target_rows_per_salt: int = 1_000_000,
     detect_late_data: bool = True,
     week_tier: bool = False,
@@ -182,13 +190,7 @@ def run_pipeline(
         }
         # canonical is a single global latest-wins table (dt="ALL"):
         # any changed raw date invalidates it as a whole
-        canon_crcs = {
-            "ALL": zlib.crc32(
-                ";".join(
-                    f"{d}={c}" for d, c in sorted(pages_crcs.items())
-                ).encode()
-            )
-        }
+        canon_crcs = {"ALL": _fingerprint(pages_crcs)}
     else:
         pages_crcs = None
         canon_crcs = None
@@ -207,7 +209,7 @@ def run_pipeline(
     # -- raw -> 1m, with explicit salted partitioning for head domains
     def build_t1m(df):
         salted = P.salted_repartition(df, target_rows_per_salt=target_rows_per_salt)
-        return R.rollup_from_points(R.raw_points(salted), "1m", bin_mode).withColumn(
+        return R.rollup_from_points(R.raw_points(salted), "1m").withColumn(
             "dt", F.to_date("bucket_ts")
         )
 
@@ -238,62 +240,32 @@ def run_pipeline(
             )
         )
 
-    # -- opt-in 1w long-retention hop. ALL-OR-NOTHING like the gapfill
+    # -- opt-in 1w long-retention hop: a full rebuild like the gapfill
     # view, NOT per-dt resumable: a week partition (dt = ISO Monday)
     # aggregates SEVEN t1d day partitions, so per-dt input pruning
     # against completed week dts would drop only the Monday day and
     # silently rebuild every done week from 6/7 of its days on resume.
     # The week tier is the coarsest state (smallest of the ladder), so
     # rebuild-on-any-t1d-change is cheap and keeps resume exact: the
-    # stage is pinned to a global fingerprint of the t1d manifest.
+    # stage is pinned to a fingerprint of the whole t1d manifest.
     if week_tier:
         t1d_dir = os.path.join(out_root, "t1d")
-        fp_w = _global_fingerprint(out_root, "t1d")
-        w_man = M.read_manifest(out_root, "t1w")
-        w_valid = bool(w_man) and all(e.get("input_crc") == fp_w for e in w_man)
-        if resume and w_valid:
-            reports.append(
-                {
-                    "stage": "t1w",
-                    "new_partitions": 0,
-                    "rows_written": 0,
-                    "bytes_written": 0,
-                    "skipped_partitions": len(w_man),
-                    "version": M.table_version(os.path.join(out_root, "t1w")),
-                    "wall_sec": 0.0,
-                }
+        reports.append(
+            _run_stage(
+                spark, out_root, "t1w",
+                spark.read.parquet(t1d_dir), None,
+                lambda df: R.rollup_tier_up(df.drop("dt"), "1w").withColumn(
+                    "dt", F.to_date("bucket_ts")
+                ),
+                M.table_version(t1d_dir), resume,
+                fingerprint=_fingerprint(M.upstream_crcs(out_root, "t1d")),
             )
-        else:
-            reports.append(
-                _run_stage(
-                    spark, out_root, "t1w",
-                    spark.read.parquet(t1d_dir), F.lit("__none__"),
-                    lambda df: R.rollup_tier_up(df.drop("dt"), "1w").withColumn(
-                        "dt", F.to_date("bucket_ts")
-                    ),
-                    M.table_version(t1d_dir), False,
-                    upstream={},  # placeholder; entries pinned below
-                    all_or_nothing=True,
-                )
-            )
-            # pin exactly the dts this rebuild produced: the static
-            # overwrite wiped any orphan week partitions and the replace
-            # merge dropped their manifest entries, so the read-back IS
-            # the produced set — a t1d retention trim can no longer
-            # launder stale weeks into the valid lineage
-            man = M.read_manifest(out_root, "t1w")
-            M.write_partition_entries(
-                out_root, "t1w",
-                man,
-                M.table_version(t1d_dir),
-                {e["dt"]: fp_w for e in man},
-            )
+        )
 
     # -- gap-filled 1h view (materialized for readers/BeatLex).
-    # Interpolation crosses dates -> all-or-nothing, pinned to a global
-    # fingerprint of the upstream manifest.
+    # Interpolation crosses dates -> a full rebuild, pinned to a
+    # fingerprint of the whole upstream manifest.
     t1h_dir = os.path.join(out_root, "t1h")
-    fp = _global_fingerprint(out_root, "t1h")
 
     def build_gap(df):
         # cluster the scan by url ONCE: HashPartitioning(url) satisfies
@@ -303,7 +275,7 @@ def run_pipeline(
         # instead of two full shuffles of the tier (at N executors the
         # removed shuffle is cross-JVM serde, the dominant marginal
         # cost of the stage; output bit-identical — commutative aggs)
-        view = R.tier_view(df.drop("dt").repartition(F.col("url")), bin_mode=bin_mode)
+        view = R.tier_view(df.drop("dt").repartition(F.col("url")))
         return G.densify_fill(
             view.select("url", "bucket_ts", "cnt", "vmean"),
             "1h",
@@ -311,40 +283,14 @@ def run_pipeline(
             method="interp",
         ).withColumn("dt", F.to_date("bucket_ts"))
 
-    gap_man = M.read_manifest(out_root, "gapfill_1h")
-    gap_valid = bool(gap_man) and all(e.get("input_crc") == fp for e in gap_man)
-    if resume and gap_valid:
-        reports.append(
-            {
-                "stage": "gapfill_1h",
-                "new_partitions": 0,
-                "rows_written": 0,
-                "bytes_written": 0,
-                "skipped_partitions": len(gap_man),
-                "version": M.table_version(os.path.join(out_root, "gapfill_1h")),
-                "wall_sec": 0.0,
-            }
+    reports.append(
+        _run_stage(
+            spark, out_root, "gapfill_1h",
+            spark.read.parquet(t1h_dir), None,
+            build_gap, M.table_version(t1h_dir), resume,
+            fingerprint=_fingerprint(M.upstream_crcs(out_root, "t1h")),
         )
-    else:
-        reports.append(
-            _run_stage(
-                spark, out_root, "gapfill_1h",
-                spark.read.parquet(t1h_dir), F.lit("__none__"),
-                build_gap, M.table_version(t1h_dir), False,
-                upstream={},  # placeholder; entries pinned below
-                all_or_nothing=True,
-            )
-        )
-        # pin every entry to the global fingerprint (entries pass through
-        # whole — bytes/files metrics survive; write_partition_entries
-        # re-stamps the lineage keys itself)
-        man = M.read_manifest(out_root, "gapfill_1h")
-        M.write_partition_entries(
-            out_root, "gapfill_1h",
-            man,
-            M.table_version(t1h_dir),
-            {e["dt"]: fp for e in man},
-        )
+    )
 
     # -- Gorilla blocks for the 1h tier (per url x dt; dt-resumable)
     gap_dir = os.path.join(out_root, "gapfill_1h")

@@ -362,7 +362,6 @@ def stream_rollup_to_tier(
     key_col: str = "url",
     ts_col: str = "ts",
     value_col: str = "value",
-    bin_mode: str = "int",
 ):
     """Continuous aggregate maintenance: finalized windows -> tier table.
 
@@ -392,7 +391,7 @@ def stream_rollup_to_tier(
         .groupBy(
             F.window(F.col(ts_col), window).alias("win"),
             F.col(key_col).alias("url"),
-            bin_col(F.col(value_col), bin_mode).alias("bin"),
+            bin_col(F.col(value_col)).alias("bin"),
         )
         .agg(
             F.count(F.lit(1)).alias("cnt"),

@@ -18,8 +18,8 @@ def _tier(spark, sf_dir):
         F.col("ts"),
         F.round(F.col("value") * 100).alias("value"),
     )
-    t1h = R.rollup_from_points(ev, "1h", bin_mode="int")
-    return R.tier_view(t1h, bin_mode="int").select("url", "bucket_ts", "cnt", "vmean")
+    t1h = R.rollup_from_points(ev, "1h")
+    return R.tier_view(t1h).select("url", "bucket_ts", "cnt", "vmean")
 
 
 def _canon(df):

@@ -134,30 +134,6 @@ def test_whole_batch_parity(tiny_batches):
     assert got == want and len(got) == 20
 
 
-def test_assume_partitioned_skips_exchange(spark):
-    df = spark.createDataFrame(
-        [(g, i) for g in range(6) for i in range(4)], "g long, i long"
-    ).repartition(4, "g")
-
-    def kernel(pdf):
-        return pd.DataFrame({"g": [int(pdf["g"].iloc[0])], "n": [len(pdf)]})
-
-    out = batched_group_apply(
-        df, ["g"], kernel, "g long, n long", assume_partitioned=True
-    )
-    # correctness: still one row per complete group
-    assert _rowset(out) == [(g, 4) for g in range(6)]
-    # plan: the pre-partitioned input must not be exchanged again --
-    # exactly one shuffle (the caller's repartition), none added
-    plan = (
-        out._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert plan.count("Exchange") == 1
-
-
 def test_null_key_group_parity(tiny_batches):
     """Null keys form ONE group, matching groupBy().applyInPandas —
     not silently dropped (pandas dropna) nor singleton-flushed."""

@@ -4,6 +4,8 @@ id assigner."""
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import functions as F
 
 from spartan2_spark.datagen import synth_pages
@@ -13,6 +15,19 @@ from spartan2_spark.operators.partitioning import (
     salted_repartition,
     with_domain,
 )
+
+
+@contextlib.contextmanager
+def _conf(spark, settings: dict[str, str]):
+    """Session confs set for the block, restored after it."""
+    saved = {k: spark.conf.get(k) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_with_domain_extracts_host(spark):
@@ -74,8 +89,15 @@ def test_global_dense_ids_order_and_parallelism_invariance(spark):
     keys = spark.createDataFrame(
         [(f"k{i:04d}",) for i in range(997)], "node_key string"
     )
-    a = global_dense_ids(keys, "node_key", "node_id", num_partitions=7).toPandas()
-    b = global_dense_ids(keys, "node_key", "node_id", num_partitions=2).toPandas()
+
+    def dense(n_parts: int):
+        with _conf(spark, {
+            "spark.sql.shuffle.partitions": str(n_parts),
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        }):
+            return global_dense_ids(keys, "node_key", "node_id").toPandas()
+
+    a, b = dense(7), dense(2)
     a = a.sort_values("node_key").reset_index(drop=True)
     b = b.sort_values("node_key").reset_index(drop=True)
     # dense 0..n-1 in key sort order, independent of partition count
@@ -86,20 +108,77 @@ def test_global_dense_ids_order_and_parallelism_invariance(spark):
 def test_global_row_numbers_matches_single_partition_reference(spark):
     """Property: the distributed numbering equals the plain
     row_number() over a single-partition window, including with
-    duplicate sort keys broken by a unique tie-break column."""
+    duplicate sort keys broken by a unique tie-break column — and the
+    byte-weighted prefix sum behind ``compaction_plan`` equals its
+    single-window cumsum. Both must hold under every {exchange reuse,
+    AQE} plan environment: the input below comes out of a shuffle, so
+    its per-partition row order (and with it the range-bound sample)
+    differs between evaluations, and an unpinned ranged relation read
+    twice pairs local sums with another evaluation's offsets."""
     import numpy as np
     from pyspark.sql import Window as W
 
+    from spartan2_spark.operators.compaction import compaction_plan
     from spartan2_spark.operators.partitioning import global_row_numbers
 
     rng = np.random.default_rng(7)
     rows = [(int(i), float(rng.integers(0, 20))) for i in range(500)]
     df = spark.createDataFrame(rows, "id long, score double")
     order = [F.desc("score"), F.asc("id")]
-    got = global_row_numbers(df, order, "rn", num_partitions=7).toPandas()
+    with _conf(spark, {
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }):
+        got = global_row_numbers(df, order, "rn").toPandas()
     ref = df.withColumn("rn_ref", F.row_number().over(W.orderBy(*order))).toPandas()
     m = got.merge(ref[["id", "rn_ref"]], on="id")
     assert (m["rn"] == m["rn_ref"]).all()
+
+    n = 200_000
+    skewed = (
+        spark.range(2 * n)
+        .select(
+            (F.col("id") % n).alias("url"),
+            # 70% of the rows in one tier
+            F.when(F.col("id") % 10 < 7, F.lit("hot"))
+            .otherwise(F.concat(F.lit("k"), (F.col("id") % 13).cast("string")))
+            .alias("tier"),
+            (F.col("id") % 97 + 1).alias("bytes"),
+        )
+        .groupBy("url")
+        .agg(F.first("tier").alias("tier"), F.sum("bytes").alias("bytes"))
+        .withColumn("start_ts", F.lit(0))
+    )
+    order = [F.col("tier"), F.col("bytes").desc(), F.col("url")]
+    cum = W.partitionBy("tier").orderBy("url", "start_ts").rowsBetween(
+        W.unboundedPreceding, 0
+    )
+    plan_cols = ["tier", "grp", "n_blocks", "total_bytes"]
+    for reuse in ("true", "false"):
+        for aqe in ("true", "false"):
+            env = {"spark.sql.exchange.reuse": reuse, "spark.sql.adaptive.enabled": aqe}
+            with _conf(spark, env):
+                rn = global_row_numbers(skewed, order, "rn").select("url", "rn")
+                rn_ref = skewed.select(
+                    "url", F.row_number().over(W.orderBy(*order)).alias("rn_ref")
+                )
+                assert rn.count() == n, env
+                bad = rn.join(rn_ref, "url").filter(F.col("rn") != F.col("rn_ref"))
+                assert bad.count() == 0, env
+
+                plan = compaction_plan(skewed, target_bytes=5000)
+                plan_ref = (
+                    skewed.withColumn("__c", F.sum("bytes").over(cum))
+                    .withColumn("grp", F.floor((F.col("__c") - F.col("bytes")) / 5000))
+                    .groupBy("tier", "grp")
+                    .agg(
+                        F.count(F.lit(1)).cast("long").alias("n_blocks"),
+                        F.sum("bytes").cast("long").alias("total_bytes"),
+                    )
+                )
+                assert sorted(map(tuple, plan.select(plan_cols).collect())) == sorted(
+                    map(tuple, plan_ref.select(plan_cols).collect())
+                ), env
 
 
 def test_zorder_key_interleaves_and_clusters(spark):

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -48,7 +47,7 @@ def test_tier_consistency(spark, out_root):
 def test_resume_skips_completed(spark, pages, first_run, out_root):
     r2 = run_pipeline(spark, pages, out_root, resume=True)
     by_stage = {r["stage"]: r for r in r2}
-    for s in ("canonical", "t1m", "t1h", "t1d", "blocks_1h"):
+    for s in ("canonical", "t1m", "t1h", "t1d", "gapfill_1h", "blocks_1h"):
         assert by_stage[s]["new_partitions"] == 0, s
         assert by_stage[s]["skipped_partitions"] > 0, s
     # manifests unchanged content-wise (same crcs per dt)
@@ -62,9 +61,7 @@ def test_resume_recomputes_only_missing(spark, pages, out_root):
     man = M.read_manifest(out_root, "t1m")
     victim = man[0]
     rest = man[1:]
-    M._atomic_write(
-        M.stage_manifest_path(out_root, "t1m"), json.dumps(rest, indent=0)
-    )
+    M.write_manifest(out_root, "t1m", rest)
     r = run_pipeline(spark, pages, out_root, resume=True)
     by_stage = {x["stage"]: x for x in r}
     assert by_stage["t1m"]["new_partitions"] == 1
@@ -119,11 +116,14 @@ def test_late_arrival_recomputes_exactly_changed_dt(spark, tmp_path):
     assert r_late["t1m"]["skipped_partitions"] == 3
     assert r_late["t1h"]["new_partitions"] == 1
     assert r_late["t1d"]["new_partitions"] == 1
+    # gap-fill interpolates across dates: a changed t1h dt rebuilds it whole
+    assert r_late["gapfill_1h"]["new_partitions"] >= 1
+    assert r_late["gapfill_1h"]["skipped_partitions"] == 0
     assert r_late["blocks_1h"]["new_partitions"] >= 1
 
     # refreshed incrementally == computed from scratch, per-dt bit-equal
     run_pipeline(spark, everything, root_b, resume=True)
-    for stage in ("t1m", "t1h", "t1d", "canonical"):
+    for stage in ("t1m", "t1h", "t1d", "canonical", "gapfill_1h", "blocks_1h"):
         a = {e["dt"]: (e["rows"], e["value_crc"]) for e in M.read_manifest(root_a, stage)}
         b = {e["dt"]: (e["rows"], e["value_crc"]) for e in M.read_manifest(root_b, stage)}
         assert a == b, stage
@@ -445,10 +445,7 @@ def test_all_or_nothing_rebuild_purges_orphans(spark, tmp_path):
             p = os.path.join(sdir, f"dt={d}")
             if os.path.isdir(p):
                 shutil.rmtree(p)
-        _M._atomic_write(
-            _M.stage_manifest_path(out, stage),
-            json.dumps([e for e in sman if e["dt"] not in drop], indent=0),
-        )
+        _M.write_manifest(out, stage, [e for e in sman if e["dt"] not in drop])
 
     # resumed run over the trimmed corpus: the completed upstream dts
     # are skipped, the t1w fingerprint mismatch forces the week rebuild

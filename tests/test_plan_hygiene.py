@@ -389,11 +389,18 @@ def test_phrase_match_prunes_scan_and_filters_in_explode(spark, sf_dir):
 
 
 def test_frontier_interleave_distributed_ranking(spark, sf_dir):
-    """frontier_interleave's global position must come from the range-
-    repartitioned distributed ranking, never a global single-partition
-    sort of the data."""
+    """frontier_interleave's global position must come from the
+    distributed ranking, never a global single-partition sort of the
+    data. The ranked relation is pinned by a checkpoint, whose scan
+    hides the range exchange, so the check is on what reaches a single
+    partition: the per-task offsets aggregate may, data rows may not —
+    every SinglePartition exchange must sit directly on an aggregate."""
     plan = plan_of(E.queries()["frontier_interleave"](spark, sf_dir), "simple")
-    assert "rangepartitioning" in plan, plan
+    lines = plan.splitlines()
+    singles = [i for i, line in enumerate(lines) if "Exchange SinglePartition" in line]
+    assert singles, plan
+    for i in singles:
+        assert "HashAggregate" in lines[i + 1], plan
 
 
 def test_ohlc_is_single_exchange_agg(spark, sf_dir):

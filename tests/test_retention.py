@@ -4,7 +4,6 @@ resume interaction, audit log."""
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
 
 import pytest
@@ -48,14 +47,13 @@ def test_dry_run_plans_without_deleting(spark, built, out_root):
 
 def test_refuses_uncovered_partition(spark, built, out_root):
     # tamper: break the crc chain for one covered dt
-    p = M.stage_manifest_path(out_root, "t1h")
-    man = json.load(open(p))
+    man = M.read_manifest(out_root, "t1h")
     saved = None
     for e in man:
         if e["dt"] == "2024-01-01":
             saved = e["input_crc"]
             e["input_crc"] = e["input_crc"] + 1
-    open(p, "w").write(json.dumps(man))
+    M.write_manifest(out_root, "t1h", man)
     try:
         plan = apply_retention(out_root, {"t1m": 2}, NOW, dry_run=True)
         by_dt = {a["dt"]: a["action"] for a in plan}
@@ -65,7 +63,7 @@ def test_refuses_uncovered_partition(spark, built, out_root):
         for e in man:
             if e["dt"] == "2024-01-01":
                 e["input_crc"] = saved
-        open(p, "w").write(json.dumps(man))
+        M.write_manifest(out_root, "t1h", man)
 
 
 def test_expire_drops_tombstones_and_logs(spark, built, out_root):
@@ -128,15 +126,13 @@ def test_tombstone_sweep_ignores_current_cutoff(spark, built, out_root):
     """A tombstoned-but-undeleted partition is swept even when the
     stage's keep_days was raised (or the stage dropped from policies):
     expired_at alone authorizes the delete."""
-    man_path = M.stage_manifest_path(out_root, "t1h")
     entries = M.read_manifest(out_root, "t1h")
     victim = min(entries, key=lambda e: e["dt"])
     part_dir = os.path.join(out_root, "t1h", f"dt={victim['dt']}")
     assert os.path.isdir(part_dir)
     # simulate a crash between tombstone write and directory delete
     victim["expired_at"] = 1.0
-    with open(man_path, "w") as f:
-        json.dump(entries, f)
+    M.write_manifest(out_root, "t1h", entries)
     # keep_days so large nothing is past the cutoff; different stage in
     # policies entirely — the sweep must still finish the delete
     plan = apply_retention(out_root, {"t1d": 9999}, NOW)
