@@ -77,8 +77,9 @@ def compact_tier(
         n_parts, F.col("dt"), *[F.col(c) for c in sort_cols]
     ).sortWithinPartitions("dt", *sort_cols)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    compacted.write.mode("overwrite").partitionBy("dt").parquet(table_dir)
+    compacted.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("dt").parquet(table_dir)
 
     after_df = spark.read.parquet(table_dir)
     after = {

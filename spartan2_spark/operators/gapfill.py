@@ -137,15 +137,11 @@ def fill_from_descriptors(
     """Expand gap descriptors to dense filled rows (the serve-dense
     half). Returns (key, bucket, <value_cols>) — filled rows only.
 
-    The explode multiplies rows 10-100x; the descriptor rows upstream
-    are small, so the planner (and AQE coalescing) sizes the stage for
-    the PRE-explode bytes and underestimates output parallelism. Spread
-    descriptors round-robin first — cheap (sparse side) — so the
-    explosion and downstream consumers scale with the cluster.
+    Layout: the expansion is a narrow projection, so gap rows keep the
+    descriptors' partitioning (in ``densify_fill``, the tier's url hash
+    exchange): files per dt follow that AQE-sized exchange, not a spread.
     """
     step = _tier_step(tier_name)
-    sc = desc.sparkSession.sparkContext
-    desc = desc.repartition(sc.defaultParallelism * 2)
     axis = desc.select(
         "*",
         F.explode(

@@ -113,13 +113,12 @@ def _run_stage(
 
     if fingerprint is None or not done:
         out_df = build(not_done(input_df, input_dt_col))
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode",
-            "dynamic" if fingerprint is None else "static",
-        )
-        out_df.write.mode("overwrite").partitionBy("dt").parquet(out_dir)
+        out_df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic" if fingerprint is None else "static"
+        ).partitionBy("dt").parquet(out_dir)
 
-        written = spark.read.parquet(out_dir)
+        # read back with the schema just written: no inference job
+        written = spark.read.schema(out_df.schema).parquet(out_dir)
         new = not_done(written, F.col("dt"))
         if upstream:
             # a dt on disk but absent from the upstream lineage was NOT

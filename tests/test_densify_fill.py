@@ -2,14 +2,10 @@
 
 from __future__ import annotations
 
-import sys
+from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from spartan2_spark.operators import gapfill as G  # noqa: E402
-from spartan2_spark.operators import rollup as R  # noqa: E402
+from spartan2_spark.operators import gapfill as G
+from spartan2_spark.operators import rollup as R
 
 
 def _tier(spark, sf_dir):

@@ -1,10 +1,6 @@
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as E  # noqa: E402
+import __spark_entry__ as E
 
 
 def test_entry_smoke(spark):

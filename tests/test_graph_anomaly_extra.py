@@ -3,14 +3,11 @@
 from __future__ import annotations
 
 import datetime as dt
-import sys
 
-sys.path.insert(0, "/root/repo")
+from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from spartan2_spark.operators.anomaly import burst_involvement  # noqa: E402
-from spartan2_spark.operators.graph import kcore  # noqa: E402
+from spartan2_spark.operators.anomaly import burst_involvement
+from spartan2_spark.operators.graph import kcore
 
 
 def test_kcore_triangle_plus_tail(spark):

@@ -13,12 +13,15 @@
 from __future__ import annotations
 
 import io
+import os
 from contextlib import redirect_stdout
 
 import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -258,7 +261,7 @@ def test_rollup_scan_prunes_columns(spark):
     from spartan2_spark.datagen import ensure_pages
     from spartan2_spark.operators import rollup as R
 
-    pages = ensure_pages(spark, "/root/repo/.cache", 20_000)
+    pages = ensure_pages(spark, os.path.join(REPO, ".cache"), 20_000)
     plan = plan_of(R.rollup_from_points(R.raw_points(pages), "1m"))
     schema_lines = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert schema_lines, "no scan ReadSchema found"
@@ -269,7 +272,7 @@ def test_rollup_is_single_partial_final_hashagg(spark):
     from spartan2_spark.datagen import ensure_pages
     from spartan2_spark.operators import rollup as R
 
-    pages = ensure_pages(spark, "/root/repo/.cache", 20_000)
+    pages = ensure_pages(spark, os.path.join(REPO, ".cache"), 20_000)
     plan = plan_of(R.rollup_from_points(R.raw_points(pages), "1m"), "simple")
     assert plan.count("HashAggregate") == 2  # partial + final, nothing else
     assert "Exchange" in plan and plan.count("Exchange") == 1
@@ -650,7 +653,7 @@ def test_cartesian_classifier_bounded_vs_risky(spark, sf_dir):
     bounded; a genuine data-sided cartesian still trips the flag."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(REPO, "tools"))
     from plan_audit import bounded_cartesians
 
     # eaglemine: its one cartesian must classify as bounded

@@ -2,13 +2,9 @@
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
-
-from spartan2_spark.operators.spectral import (  # noqa: E402
+from spartan2_spark.operators.spectral import (
     eigen_spokes_nodes,
     power_iteration,
     summarize_graph_lsh,

@@ -2,15 +2,11 @@
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from spartan2_spark.task import ADPolicy, AnomalyDetection, PipeLine, Task  # noqa: E402
+from spartan2_spark.task import ADPolicy, AnomalyDetection, PipeLine, Task
 
 
 def _events(spark, sf_dir):
