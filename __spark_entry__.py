@@ -3275,15 +3275,15 @@ _EMBEDDING_NEARDUP_SQL = """
 
 
 def _q_minhash_dedup(spark, sf_dir):
-    """MinHash+LSH near-dup pairs, portable-hash mode: the whole
-    shingle -> k-minhash -> banded-bucket-join -> exact-Jaccard-verify
-    pipeline is value-exact oracle-checked against DuckDB (xxhash mode
-    stays the production default)."""
+    """MinHash+LSH near-dup pairs on portable polynomial hashes: the
+    whole shingle -> k-minhash -> banded-bucket-join ->
+    exact-Jaccard-verify pipeline is value-exact oracle-checked against
+    DuckDB."""
     from spartan2_spark.operators.dedup import minhash_lsh_pairs
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return minhash_lsh_pairs(
-        d, k=32, bands=8, jaccard_threshold=0.2, hash_mode="poly"
+        d, k=32, bands=8, jaccard_threshold=0.2
     )
 
 
@@ -3377,20 +3377,19 @@ def _q_dedup_clusters(spark, sf_dir):
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = dedup_clusters(
-        d, k=32, bands=8, jaccard_threshold=0.2, hash_mode="poly"
+        d, k=32, bands=8, jaccard_threshold=0.2
     )
     return out.select("id", "cluster", F.col("keep").cast("long").alias("keep"))
 
 
 def _q_simhash_dedup(spark, sf_dir):
-    """SimHash near-dup pairs, portable-hash mode: parity-bit
-    polynomial hashes make the 64-bit fingerprints, the 16-bit band
-    blocking, and the Hamming verify value-exact oracle-checked
-    (xxhash mode stays the production default)."""
+    """SimHash near-dup pairs: parity-bit polynomial hashes make the
+    64-bit fingerprints, the 16-bit band blocking, and the Hamming
+    verify value-exact oracle-checked."""
     from spartan2_spark.operators.dedup import simhash64, simhash_pairs
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return simhash_pairs(simhash64(d, hash_mode="poly"), max_hamming=10)
+    return simhash_pairs(simhash64(d), max_hamming=10)
 
 
 def _simhash_sql(max_hamming: int = 10) -> str:
@@ -3493,7 +3492,7 @@ def _q_ivf_topk(spark, sf_dir):
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return ivf_topk(
-        e, e.filter(F.col("vec_id") < 5), k=5, nlist=8, nprobe=2, hash_mode="poly"
+        e, e.filter(F.col("vec_id") < 5), k=5, nlist=8, nprobe=2
     )
 
 
@@ -3559,14 +3558,14 @@ def _ivf_sql(k: int = 5, nlist: int = 8, nprobe: int = 2, dim: int = 64,
 
 
 def _q_doc_fingerprint(spark, sf_dir):
-    """Bottom-k rolling-hash document fingerprints, portable-hash mode
-    (polynomial mod 2^31-1 — same values computable in DuckDB, so the
-    whole shingle->hash->bottom-k->combine pipeline is value-exact
-    oracle-checked; xxhash mode stays the production default)."""
+    """Bottom-k rolling-hash document fingerprints (polynomial mod
+    2^31-1 — same values computable in DuckDB, so the whole
+    shingle->hash->bottom-k->combine pipeline is value-exact
+    oracle-checked)."""
     from spartan2_spark.operators.text import fingerprint_bottom_k
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return fingerprint_bottom_k(d, "text", hash_mode="poly").select(
+    return fingerprint_bottom_k(d, "text").select(
         "doc_id", "fp_hash"
     )
 
@@ -3901,7 +3900,6 @@ def _q_tdigest_quantiles(spark, sf_dir):
         ["event_type"],
         "value",
         qs=(0.5, 0.95),
-        hash_mode="poly",
     )
 
 
@@ -4682,16 +4680,16 @@ def _q_svd_spokes(spark, sf_dir):
 
 
 def _q_graph_summarize(spark, sf_dir):
-    """DPGS-style MinHash-LSH graph summarization, portable-hash mode —
-    the signature family is the same polynomial universal hash the
-    DuckDB twin computes, so supernode grouping and the MDL gain are
-    value-exact oracle-checked."""
+    """DPGS-style MinHash-LSH graph summarization — the signature
+    family is the same polynomial universal hash the DuckDB twin
+    computes, so supernode grouping and the MDL gain are value-exact
+    oracle-checked."""
     from spartan2_spark.operators.spectral import summarize_graph_lsh
 
     li = _lineitem(spark, sf_dir).select(
         F.col("l_partkey").alias("src"), F.col("l_suppkey").alias("dst")
     )
-    res = summarize_graph_lsh(li, k_hashes=4, hash_mode="poly")
+    res = summarize_graph_lsh(li, k_hashes=4)
     return res["mdl_gain_bits"].select(
         "supernode", "n_nodes", F.round("gain_bits", 6).alias("gain_bits")
     )
@@ -4732,7 +4730,7 @@ def _q_dpgs_merge_refine(spark, sf_dir):
     ev = _events(spark, sf_dir).select(
         F.col("user_id").alias("src"), F.col("event_type").alias("dst")
     )
-    res = dpgs_merge_round(ev, k_hashes=4, hash_mode="poly", max_group=500)
+    res = dpgs_merge_round(ev, k_hashes=4, max_group=500)
     return res["assign"]
 
 
@@ -4816,7 +4814,7 @@ def _q_dpgs_summarize_fixpoint(spark, sf_dir):
     ev = _events(spark, sf_dir).select(
         F.col("user_id").alias("src"), F.col("event_type").alias("dst")
     )
-    res = dpgs_summarize(ev, k_hashes=4, hash_mode="poly", max_rounds=6)
+    res = dpgs_summarize(ev, k_hashes=4, max_rounds=6)
     return (
         res["assign"]
         .withColumn("rounds", F.lit(len(res["history"])))
@@ -6442,7 +6440,7 @@ def _q_kgrass(spark, sf_dir):
     li = _lineitem(spark, sf_dir).select(
         F.col("l_partkey").alias("src"), F.col("l_suppkey").alias("dst")
     )
-    res = kgrass_summarize(li, k=8, hash_mode="poly")
+    res = kgrass_summarize(li, k=8)
     return res["superedges"].select(
         "sn_src",
         "sn_dst",
@@ -6495,7 +6493,7 @@ def _q_kgrass_merge_refine(spark, sf_dir):
     li = _lineitem(spark, sf_dir).select(
         F.col("l_partkey").alias("src"), F.col("l_suppkey").alias("dst")
     )
-    res = kgrass_merge_round(li, k=8, hash_mode="poly", max_group=500)
+    res = kgrass_merge_round(li, k=8, max_group=500)
     return res["assign"]
 
 
@@ -9042,7 +9040,7 @@ def _q_dedup_keep_best(spark, sf_dir):
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return dedup_keep_best(
-        d, k=32, bands=8, jaccard_threshold=0.2, hash_mode="poly"
+        d, k=32, bands=8, jaccard_threshold=0.2
     )
 
 
@@ -11493,7 +11491,6 @@ def oracle_sql() -> dict[str, str]:
         # planted-anomaly recovery pytest-proven
         # resample_fourier / beatlex_summarize / eigenpulse_density /
         # whole-series FFT/DTW/SVD kernels;
-        # minhash/simhash/ann/fingerprint/multimodal: xxhash64- or
-        # plane-based (no DuckDB twin); densest_subgraph/tdigest:
+        # multimodal: plane-based (no DuckDB twin); densest_subgraph/tdigest:
         # iterative/sketch -> driver records rows-only checks
     }

@@ -378,6 +378,8 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
     while pos < len(buf):
         if buf[pos] != 0xFF:
             raise ValueError(f"expected marker at {pos}")
+        while pos + 1 < len(buf) and buf[pos + 1] == 0xFF:
+            pos += 1  # fill bytes may precede any marker (B.1.1.2)
         marker = buf[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
@@ -450,6 +452,12 @@ def _decode_scan(buf, pos, frame, scan, qts, huff, restart_interval):
     h, w = frame["h"], frame["w"]
     hmax = max(c["h"] for c in scan)
     vmax = max(c["v"] for c in scan)
+    for c in scan:
+        if hmax % c["h"] or vmax % c["v"]:
+            raise ValueError(
+                f"unsupported sampling {c['h']}x{c['v']} under max "
+                f"{hmax}x{vmax}: upsampling needs integer factors"
+            )
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
     planes = [

@@ -1,7 +1,7 @@
-"""Vectorized (Arrow/numpy) minhash signature kernel — the poly-mode
-fast path for ``minhash_lsh_pairs``.
+"""Vectorized (Arrow/numpy) minhash signature kernel — the signature
+stage of ``minhash_lsh_pairs``.
 
-The SQL formulation of the signature stage evaluates two nested
+A SQL formulation of the signature stage evaluates two nested
 higher-order ``transform`` lambdas per row (shingle substrings, then
 k re-hash/min slots). Catalyst does not codegen higher-order-function
 lambdas — they run on the interpreted expression evaluator — so the
@@ -27,8 +27,7 @@ in ``__spark_entry__._minhash_prelude`` recomputes these values):
 Everything stays mod-2^31-1 so all intermediates fit int64 with wide
 margins (max product: codepoint(2^21) * 31^(n-1)).
 
-Used by ``dedup.minhash_lsh_pairs(hash_mode='poly')`` (auto) — the
-xxhash production mode keeps the JVM-intrinsic SQL path.
+Used by ``dedup.minhash_lsh_pairs``, whose only hash path this is.
 """
 
 from __future__ import annotations

@@ -12,9 +12,10 @@ Two families:
    aggregation. t-digest merges are order-SENSITIVE in general, so the
    Spark wiring makes the result parallelism-invariant by construction:
    values are assigned to a fixed number of deterministic hash shards
-   (shard = xxhash64(value-bits) mod S, independent of physical
-   partitioning), one partial digest is built per (key, shard) from
-   sorted values, and the per-key fold merges shards in shard order.
+   (shard = poly hash of the centi-quantized value mod S, independent
+   of physical partitioning), one partial digest is built per (key,
+   shard) from sorted values, and the per-key fold merges shards in
+   shard order.
    Same input => same digest, on 8 cores or 800 executors.
 """
 
@@ -123,7 +124,6 @@ def tdigest_quantiles(
     qs: tuple[float, ...] = (0.5, 0.95, 0.99),
     delta: int = 100,
     n_shards: int = 32,
-    hash_mode: str = "xxhash",
 ) -> DataFrame:
     """Per-key quantiles via parallelism-invariant two-phase t-digest.
 
@@ -132,20 +132,14 @@ def tdigest_quantiles(
     Phase 2: per key, one merge-all compression over the shard
     centroids in (shard, emission) order.
 
-    ``hash_mode='poly'`` shards on the portable polynomial hash of the
-    centi-quantized value (identical in any SQL engine — the DuckDB
-    twin replays the whole digest); default xxhash64 is the faster JVM
-    intrinsic.
+    Shards are the portable polynomial hash of the centi-quantized
+    value (identical in any SQL engine — the DuckDB twin replays the
+    whole digest).
     """
-    src = df.select(*key_cols, F.col(value_col).cast("double").alias("v"))
-    if hash_mode == "poly":
-        from spartan2_spark.operators.text import _poly_hash
+    from spartan2_spark.operators.text import _poly_hash
 
-        shard_h = _poly_hash(
-            F.round(F.col("v") * 100).cast("long").cast("string")
-        )
-    else:
-        shard_h = F.xxhash64(F.col("v").cast("string"))
+    src = df.select(*key_cols, F.col(value_col).cast("double").alias("v"))
+    shard_h = _poly_hash(F.round(F.col("v") * 100).cast("long").cast("string"))
     src = src.withColumn("shard", F.pmod(shard_h, F.lit(n_shards)))
 
     part_schema = T.StructType(

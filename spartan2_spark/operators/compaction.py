@@ -81,7 +81,7 @@ def compact_tier(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("dt").parquet(table_dir)
 
-    after_df = spark.read.parquet(table_dir)
+    after_df = spark.read.schema(df.schema).parquet(table_dir)
     after = {
         e["dt"]: (e["rows"], e["value_crc"]) for e in M.partition_lineage(after_df)
     }

@@ -13,7 +13,8 @@ generation is always a bucket equi-join — never an all-pairs cross):
 - embedding: sign-LSH (random hyperplanes) buckets -> exact cosine
 
 Everything is built-in column expressions + higher-order array
-functions (shingling, hashing, banding all JVM-side); no Python UDFs
+functions, except minhash's signature and verify kernels (one
+vectorized ``mapInArrow`` pass each); no row-at-a-time Python UDFs
 anywhere. Verification joins are self-joins on bucket keys; at scale
 the bucket key is the shuffle key and skewed mega-buckets are bounded
 by ``max_bucket`` (drop pathological buckets, standard LSH practice) —
@@ -32,7 +33,6 @@ __all__ = [
     "exact_dedup",
     "char_shingles_expr",
     "word_ngrams_expr",
-    "minhash_signature",
     "minhash_lsh_pairs",
     "dedup_clusters",
     "dedup_keep_best",
@@ -93,37 +93,9 @@ def word_ngrams_from_tokens(tok_col: str, n: int = 3):
 
 _POLY_P = 2147483647  # 2^31 - 1
 
-
-def minhash_signature(shingles, k: int = 64, hash_mode: str = "xxhash"):
-    """k minhashes per shingle set.
-
-    ``xxhash`` (default): min over xxhash64(shingle, seed_j) — fastest,
-    JVM intrinsic. ``poly``: a universal-hash family over a portable
-    polynomial base hash, h_j(s) = ((2j+1)*poly(s) + j^2 + 7) mod
-    (2^31-1) — identical values computable in any SQL engine (the
-    DuckDB oracle twin uses it).
-    """
-    # NB: the per-slot lambdas below MUST take exactly one parameter —
-    # PySpark interprets a second higher-order-function lambda parameter
-    # as the ARRAY INDEX, which would silently replace the seed j and
-    # collapse every signature slot to the same value.
-    def _xxhash_slot(j: int):
-        seed = F.lit(j)
-        return F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, seed)))
-
-    if hash_mode == "xxhash":
-        return F.array(*[_xxhash_slot(j) for j in range(k)])
-    if hash_mode == "poly":
-        from spartan2_spark.operators.text import _poly_hash
-
-        base = F.transform(shingles, _poly_hash)
-
-        def _poly_slot(j: int):
-            a, b = F.lit(2 * j + 1), F.lit(j * j + 7)
-            return F.array_min(F.transform(base, lambda h: (a * h + b) % _POLY_P))
-
-        return F.array(*[_poly_slot(j) for j in range(k)])
-    raise ValueError(f"unknown hash_mode {hash_mode!r}")
+# minhash verify: the doc->hash-set map is broadcast up to this many
+# estimated bytes; past it the candidate pairs shuffle-join the sets
+_VERIFY_BROADCAST_BYTES = 256 << 20
 
 
 def minhash_lsh_pairs(
@@ -135,41 +107,35 @@ def minhash_lsh_pairs(
     bands: int = 16,
     jaccard_threshold: float = 0.7,
     max_bucket: int = 1000,
-    hash_mode: str = "xxhash",
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash + banded LSH + exact verify.
 
     bands of r = k/bands rows each: P(candidate) = 1-(1-J^r)^bands.
-    Returns (id_a, id_b, jaccard) with id_a < id_b. Both modes hash
-    every shingle to a long up front and verify with hash-resolution
-    Jaccard on the hashed sets — a within-doc collision (xxhash: p ~
-    |sh|^2/2^65, poly: |sh|^2/2^32 per doc) perturbs the score
-    identically on every engine and at every cluster size, so
-    cross-engine exactness and cross-parallelism determinism hold while
-    the pair-heavy verify hashes longs instead of strings (~4x) and the
-    shingle strings are never persisted or shuffled at all.
-    ``hash_mode='poly'`` makes every value engine-portable (the DuckDB
-    oracle twin reproduces it); ``xxhash`` (production default) keeps
-    everything on the JVM intrinsic.
+    Returns (id_a, id_b, jaccard) with id_a < id_b. Every shingle is
+    hashed up front with the portable polynomial family (slot j:
+    ``min(((2j+1)*poly(s) + j^2 + 7) mod (2^31-1))``), and the verify
+    uses hash-resolution Jaccard on the hashed sets — a within-doc
+    collision (p ~ |sh|^2/2^32 per doc) perturbs the score identically
+    on every engine and at every cluster size, so the DuckDB oracle
+    twin reproduces every value, cross-parallelism determinism holds,
+    the pair-heavy verify compares longs instead of strings (~4x), and
+    the shingle strings are never persisted or shuffled at all.
 
-    ``use_arrow`` (default: auto — on for poly mode) computes the
-    shingle-hash set and all k signature slots in ONE ``mapInArrow``
-    numpy pass (functions/minhash_arrow.py) instead of the nested
-    higher-order-function expressions, which Catalyst evaluates on the
-    interpreted path: identical values (slot-level parity-tested),
-    >10x on the signature stages at sf0.1. ``use_arrow=False`` forces
-    the pure-SQL formulation.
+    The shingle-hash set and all k signature slots come from ONE
+    ``mapInArrow`` numpy pass (functions/minhash_arrow.py). The same
+    values as nested higher-order-function expressions run on
+    Catalyst's interpreted path, >10x slower on the signature stage at
+    sf0.1; a slot-level parity test holds the kernel to them.
 
-    Scale envelope of the verify stage: under the 256 MiB hash-set
-    budget the arrow path broadcasts the doc->set map and ships pairs
-    as bare ids; past it, the fallback shuffle join's volume is
-    sum over candidate pairs of both docs' set bytes — measured 58+ GB
-    for 820k x ~1.1 KB docs with 410k planted near-dup pairs. That
-    volume is inherent to exact per-pair verification; the knobs that
-    bound it are band precision (bands/r vs the threshold), max_bucket,
-    and verifying per corpus PARTITION (dedup within url-domain or
-    crawl-snapshot shards) rather than globally.
+    Scale envelope of the verify stage: under the
+    ``_VERIFY_BROADCAST_BYTES`` (256 MiB) hash-set budget the doc->set
+    map is broadcast and pairs ship as bare ids; past it, the shuffle
+    join's volume is sum over candidate pairs of both docs' set bytes —
+    measured 58+ GB for 820k x ~1.1 KB docs with 410k planted near-dup
+    pairs. That volume is inherent to exact per-pair verification; the
+    knobs that bound it are band precision (bands/r vs the threshold),
+    max_bucket, and verifying per corpus PARTITION (dedup within
+    url-domain or crawl-snapshot shards) rather than globally.
     """
     if k % bands:
         raise ValueError(
@@ -179,82 +145,31 @@ def minhash_lsh_pairs(
         )
     r = k // bands
     # Hash every shingle to a LONG immediately and materialize ONLY
-    # (id, hv): shingle strings are never persisted, shuffled, or
+    # (id, hv, sig): shingle strings are never persisted, shuffled, or
     # re-built. The checkpoint stores ~8 B/shingle (partition-local,
-    # spillable), and every later stage — the k signature slots, the
-    # band keys, and the candidate verify — reads the materialized
-    # attribute, which CollapseProject inlines for free (an
+    # spillable), and every later stage — the band keys and the
+    # candidate verify — reads the materialized attributes (an
     # un-checkpointed expression would be RE-COMPUTED per consumer:
     # measured 10x of the whole join before this structure).
-    if hash_mode not in ("poly", "xxhash"):
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
-    if use_arrow is None:
-        use_arrow = hash_mode == "poly"
-    if use_arrow and hash_mode != "poly":
-        raise ValueError("use_arrow requires hash_mode='poly' (the xxhash "
-                         "family is a JVM intrinsic with no numpy twin)")
-    if use_arrow:
-        # Arrow fast path: one mapInArrow pass computes the distinct
-        # shingle-hash set AND all k slots per row (identical values to
-        # the SQL formulation — parity-tested in test_dedup_similarity).
-        # The SQL path's two nested higher-order transforms run on the
-        # interpreted expression evaluator (no codegen) and cost ~10s
-        # at sf0.1; the numpy kernel does the same work in <0.5s.
-        from spartan2_spark.functions.minhash_arrow import minhash_batches
+    from spartan2_spark.functions.minhash_arrow import minhash_batches
 
-        id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema[id_col].dataType.simpleString()
 
-        def _kernel(batches):
-            return minhash_batches(batches, n=shingle_n, k=k)
+    def _kernel(batches):
+        return minhash_batches(batches, n=shingle_n, k=k)
 
-        sh = (
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-            .mapInArrow(
-                _kernel, schema=f"id {id_type}, hv array<bigint>, sig array<bigint>"
-            )
-            .transform(barrier)
+    sh = (
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+        .mapInArrow(
+            _kernel, schema=f"id {id_type}, hv array<bigint>, sig array<bigint>"
         )
-    else:
-        base = df.select(
-            F.col(id_col).alias("id"),
-            char_shingles_expr(text_col, shingle_n).alias("sh"),
-        )
-        if hash_mode == "poly":
-            from spartan2_spark.operators.text import _poly_hash
-
-            hv = F.transform(F.col("sh"), _poly_hash)
-        else:
-            hv = F.transform(F.col("sh"), lambda sx: F.xxhash64(sx))
-        sh = base.select("id", hv.alias("hv")).transform(barrier)
-
-        if hash_mode == "poly":
-
-            def _slot(j: int):
-                a, b = F.lit(2 * j + 1), F.lit(j * j + 7)
-                return F.array_min(
-                    F.transform(F.col("hv"), lambda h: (a * h + b) % _POLY_P)
-                )
-
-        else:
-            # re-seeded intrinsic over the 64-bit base hash — an equally
-            # valid minhash family that never touches the shingle strings
-            def _slot(j: int):
-                seed = F.lit(j)
-                return F.array_min(
-                    F.transform(F.col("hv"), lambda h: F.xxhash64(h, seed))
-                )
-
-        # second barrier: sig feeds the banded branch's 3 consumers
-        # (bucket-size agg + both join sides)
-        sh = sh.withColumn(
-            "sig", F.array(*[_slot(j) for j in range(k)])
-        ).transform(barrier)
+        .transform(barrier)
+    )
 
     def band_key(b):
-        joined = F.concat_ws(
+        return F.concat_ws(
             ",", *[F.element_at("sig", b * r + i + 1) for i in range(r)]
         )
-        return joined if hash_mode == "poly" else F.xxhash64(joined)
 
     # Shuffle diet: band rows carry ONLY (id, band, bh) through the
     # bucket self-join; the hashed shingle sets are re-joined on id for
@@ -298,15 +213,12 @@ def minhash_lsh_pairs(
     # each array once per executor instead, guarded by an
     # estimated-bytes cap; past it (true web scale) the shuffle join
     # stands, with max_bucket bounding pair counts.
-    vcol = "hv"
-    n_elems = sh.agg(F.sum(F.size(vcol))).collect()[0][0] or 0
-    est_bytes = n_elems * 8
-    if use_arrow and est_bytes <= 256 << 20:
+    n_elems = sh.agg(F.sum(F.size("hv"))).collect()[0][0] or 0
+    if n_elems * 8 <= _VERIFY_BROADCAST_BYTES:
         # Vectorized expand+verify: the doc->sorted-hash-set map is
-        # broadcast ONCE (same 256 MiB cap as the JVM broadcast join;
-        # past it the join path below stands) and ONE mapInArrow pass
-        # over the bucket id-lists expands each bucket's i<j pairs and
-        # scores them with a numpy searchsorted merge (~2 us/pair).
+        # broadcast ONCE and ONE mapInArrow pass over the bucket
+        # id-lists expands each bucket's i<j pairs and scores them with
+        # a numpy searchsorted merge (~2 us/pair).
         # This removes three interpreted/shuffle stages at once: the
         # flatten(transform(...)) pair expansion (no codegen for
         # higher-order lambdas), the pre-verify dropDuplicates of every
@@ -322,17 +234,16 @@ def minhash_lsh_pairs(
             bucket_pairs_verify_batches,
         )
 
-        pdf = sh.select("id", vcol).toPandas()
+        pdf = sh.select("id", "hv").toPandas()
         hv_map = {
             i: np.sort(np.asarray(h, dtype=np.int64))
-            for i, h in zip(pdf["id"], pdf[vcol])
+            for i, h in zip(pdf["id"], pdf["hv"])
         }
         bc = df.sparkSession.sparkContext.broadcast(hv_map)
 
         def _expand_verify(batches):
             return bucket_pairs_verify_batches(batches, bc.value)
 
-        id_type = df.schema[id_col].dataType.simpleString()
         # The bucket relation is tiny in ROWS (one per bucket) so AQE
         # coalesces it to a single partition — but the kernel's work is
         # QUADRATIC in bucket size (sum of n_i^2 pair scorings), which
@@ -373,16 +284,9 @@ def minhash_lsh_pairs(
     # |A u B| = |A| + |B| - |A n B| with per-doc distinct sizes computed
     # ONCE (5k docs) instead of array_union per candidate pair (1M+
     # pairs): halves the pair-side set-op work — measured 6.8s -> 3.5s
-    # on the sf0.1 verify stage. array_distinct guards the (rare)
-    # within-doc hash collision so the count matches true set size;
-    # the arrow path's hv is already distinct.
-    shg = sh.select(
-        "id",
-        F.col(vcol).alias("vs"),
-        F.size(F.array_distinct(vcol)).alias("nv"),
-    )
-    if est_bytes <= 256 << 20:
-        shg = F.broadcast(shg)
+    # on the sf0.1 verify stage. The kernel's hv is already a set, so
+    # its size is the distinct count.
+    shg = sh.select("id", F.col("hv").alias("vs"), F.size("hv").alias("nv"))
     cand = cand.join(
         shg.select(
             F.col("id").alias("id_a"),
@@ -534,52 +438,37 @@ def simhash64(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_mode: str = "xxhash",
 ) -> DataFrame:
     """64-bit SimHash: per bit, sign of sum over token hashes of
     (2*bit-1); assembled JVM-side from 64 one-pass aggregates.
 
-    ``poly`` mode draws bit b from the parity of the b-th polynomial
-    universal hash g_b(t) = ((2b+1)*poly(t) + b^2 + 7) mod (2^31-1) —
-    engine-portable (DuckDB oracle twin computes identical bits);
-    ``xxhash`` (default) takes the 64 bits of one xxhash64."""
+    Bit b is the parity of the b-th polynomial universal hash
+    g_b(t) = ((2b+1)*poly(t) + b^2 + 7) mod (2^31-1) — engine-portable
+    (the DuckDB oracle twin computes identical bits)."""
+    from spartan2_spark.operators.text import _poly_hash
+
     tok = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.trim(F.col(text_col)), " +")).alias("t"),
     )
-    if hash_mode == "poly":
-        from spartan2_spark.operators.text import _poly_hash
-
-        tok = tok.select("id", _poly_hash(F.col("t")).alias("th"))
-    elif hash_mode == "xxhash":
-        tok = tok.select("id", F.xxhash64("t").alias("th"))
-    else:
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    tok = tok.select("id", _poly_hash(F.col("t")).alias("th"))
     # Barrier before the 64-way aggregate: CollapseProject folds the
     # hash projection into EVERY one of the 64 aggregate expressions
     # (64 re-hashes per token — the dominant cost of the whole
     # operator); materializing (id, hash) once makes each token hash
     # exactly once.
     tok = tok.transform(barrier)
-    if hash_mode == "poly":
-        aggs = [
-            F.sum(
-                F.when(
-                    ((F.lit(2 * b + 1) * F.col("th") + F.lit(b * b + 7)) % _POLY_P)
-                    % 2
-                    == 1,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"b{b}")
-            for b in range(64)
-        ]
-    else:
-        aggs = [
-            F.sum(
-                F.when(F.col("th").bitwiseAND(F.lit(1 << b) if b < 63 else F.lit(-(2**63))) != 0, 1).otherwise(-1)
-            ).alias(f"b{b}")
-            for b in range(64)
-        ]
+    aggs = [
+        F.sum(
+            F.when(
+                ((F.lit(2 * b + 1) * F.col("th") + F.lit(b * b + 7)) % _POLY_P)
+                % 2
+                == 1,
+                1,
+            ).otherwise(-1)
+        ).alias(f"b{b}")
+        for b in range(64)
+    ]
     per_doc = tok.groupBy("id").agg(*aggs)
     sim = None
     for b in range(64):
@@ -752,7 +641,6 @@ def dedup_clusters(
     bands: int = 16,
     jaccard_threshold: float = 0.7,
     max_bucket: int = 1000,
-    hash_mode: str = "xxhash",
 ) -> DataFrame:
     """Keep-one-per-cluster deduplication: the step a training-data
     pipeline actually runs AFTER pair finding. Near-dup pairs
@@ -782,7 +670,6 @@ def dedup_clusters(
         bands=bands,
         jaccard_threshold=jaccard_threshold,
         max_bucket=max_bucket,
-        hash_mode=hash_mode,
     )
     # minhash pairs are unique (id_a < id_b) by construction - skip
     # the symmetrized-edge distinct shuffle
@@ -810,7 +697,6 @@ def dedup_keep_best(
     bands: int = 16,
     jaccard_threshold: float = 0.7,
     max_bucket: int = 1000,
-    hash_mode: str = "xxhash",
 ) -> DataFrame:
     """Quality-aware keep-one-per-cluster dedup: the canonical pick a
     production training-data pipeline actually wants. Where
@@ -848,7 +734,6 @@ def dedup_keep_best(
         bands=bands,
         jaccard_threshold=jaccard_threshold,
         max_bucket=max_bucket,
-        hash_mode=hash_mode,
     )
     # minhash pairs are unique (id_a < id_b) by construction - skip
     # the symmetrized-edge distinct shuffle

@@ -102,17 +102,16 @@ def ivf_topk(
     nprobe: int = 2,
     lloyd_rounds: int = 2,
     quantize: bool = True,
-    hash_mode: str = "xxhash",
 ) -> DataFrame:
     """IVF (inverted-file) ANN: partition the corpus into ``nlist``
     Voronoi cells around centroids, probe the ``nprobe`` nearest cells
     per query, exact cosine rerank inside.
 
     Centroid seeding is deterministic — the ``nlist`` corpus vectors
-    with smallest ``xxhash64(id)`` — then ``lloyd_rounds`` distributed
-    Lloyd iterations refine them (assign = broadcast-join argmin;
-    update = posexplode + per-(cell, pos) mean — all JVM column ops,
-    no Python kernels).
+    with the smallest portable polynomial hash of the id — then
+    ``lloyd_rounds`` distributed Lloyd iterations refine them (assign =
+    broadcast-join argmin; update = posexplode + per-(cell, pos) mean —
+    all JVM column ops, no Python kernels).
 
     At 100 TB the assignment is computed once and persisted as a layout
     (repartition by cell); per-query work touches nprobe cells only.
@@ -121,12 +120,9 @@ def ivf_topk(
         F.col(id_col).alias("corpus_id"), _vec(vec_col, quantize).alias("cv")
     ).withColumn("cn", _norm(F.col("cv")))
 
-    if hash_mode == "poly":
-        from spartan2_spark.operators.text import _poly_hash
+    from spartan2_spark.operators.text import _poly_hash
 
-        seed_h = _poly_hash(F.col("corpus_id").cast("string"))
-    else:
-        seed_h = F.xxhash64(F.col("corpus_id"))
+    seed_h = _poly_hash(F.col("corpus_id").cast("string"))
     # Seed = the nlist vectors with smallest hash. The frame is bounded
     # by limit(nlist), so enumerate it driver-side: numbering ≤nlist
     # collected rows beats row_number() over an unpartitioned window

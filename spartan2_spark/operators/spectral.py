@@ -25,12 +25,13 @@ scipy on an in-memory sparse matrix, we run DataFrame joins/aggs):
   (/root/reference/spartan/model/DPGS/DPGS.py:49-310 groups nodes by
   MinHash-LSH of neighbourhoods, then merges within groups by an MDL
   score). Our distributed analogue: one MinHash signature per node over
-  its neighbour set (k independent xxhash64 min-hashes — one groupBy,
+  its neighbour set (k independent polynomial min-hashes — one groupBy,
   no pairwise work), nodes sharing the full signature form a supernode,
   edges collapse to weighted superedges, and the MDL-ish score
   ``sum(c*ln(c))`` accounts for the encoding gain.
 
-Determinism: all hashes are xxhash64 with fixed seeds; the power
+Determinism: all hashes are the portable polynomial family
+(``_poly_node_hash``) with fixed coefficients; the power
 iteration normalizes with a fixed reduction expression, so results are
 identical at any parallelism.
 """
@@ -121,8 +122,8 @@ _POLY_P = 2147483647
 
 def _poly_node_hash(col, j: int):
     """Portable per-node hash h_j(x) = ((2j+1)*poly(x) + j^2+7) mod p —
-    same universal family as dedup.minhash_signature(poly); computable
-    verbatim in the DuckDB oracle."""
+    the universal family of dedup.minhash_lsh_pairs' signature slots;
+    computable verbatim in the DuckDB oracle."""
     from spartan2_spark.operators.text import _poly_hash
 
     h = _poly_hash(F.col(col).cast("string"))
@@ -134,7 +135,6 @@ def summarize_graph_lsh(
     src: str = "src",
     dst: str = "dst",
     k_hashes: int = 4,
-    hash_mode: str = "xxhash",
 ) -> dict:
     """DPGS-style summarization via MinHash of neighbour sets.
 
@@ -146,15 +146,9 @@ def summarize_graph_lsh(
     same xlogx shape as the reference's c_MDL code-length terms
     (model/DPGS/DPGS.py:38-47).
     """
-    if hash_mode == "poly":
-        hcols = [
-            F.min(_poly_node_hash(dst, i)).alias(f"h{i}") for i in range(k_hashes)
-        ]
-    else:
-        hcols = [
-            F.min(F.xxhash64(F.col(dst), F.lit(i))).alias(f"h{i}")
-            for i in range(k_hashes)
-        ]
+    hcols = [
+        F.min(_poly_node_hash(dst, i)).alias(f"h{i}") for i in range(k_hashes)
+    ]
     sig = (
         edges.groupBy(F.col(src).alias("node"))
         .agg(*hcols)
@@ -265,7 +259,6 @@ def kgrass_summarize(
     src: str = "src",
     dst: str = "dst",
     k: int = 8,
-    hash_mode: str = "xxhash",
 ) -> dict:
     """kGrass-style summarization to at most ``k`` supernodes
     (/root/reference/spartan/model/kGS/kGrass.py:14-216): the reference
@@ -288,16 +281,10 @@ def kgrass_summarize(
     # |A|*|B| — keeping err_term = c*(1 - c/(|A|*|B|)) in [0, c].
     e0 = edges.select(src, dst).dropDuplicates([src, dst]).transform(barrier)
 
-    if hash_mode == "poly":
-        nbr_h = _poly_node_hash(dst, 0)
-        self_h = _poly_node_hash("node", 0)
-        # h0 < 2^31 so the affine re-mix stays in int64 under ANSI
-        bucket = F.pmod((F.col("h0") * 31 + 17) % _POLY_P, F.lit(k))
-    else:
-        nbr_h = F.xxhash64(dst, F.lit(0))
-        self_h = F.xxhash64("node", F.lit(0))
-        # full-width xxhash h0 would overflow an affine re-mix — re-hash
-        bucket = F.pmod(F.xxhash64("h0", F.lit(1)), F.lit(k))
+    nbr_h = _poly_node_hash(dst, 0)
+    self_h = _poly_node_hash("node", 0)
+    # h0 < 2^31 so the affine re-mix stays in int64 under ANSI
+    bucket = F.pmod((F.col("h0") * 31 + 17) % _POLY_P, F.lit(k))
 
     src_sig = e0.groupBy(F.col(src).alias("node")).agg(F.min(nbr_h).alias("h0"))
     all_nodes = (
@@ -385,7 +372,6 @@ def dpgs_merge_round(
     src: str = "src",
     dst: str = "dst",
     k_hashes: int = 4,
-    hash_mode: str = "xxhash",
     max_group: int = 500,
     quant: float = 1000.0,
 ) -> dict:
@@ -431,7 +417,7 @@ def dpgs_merge_round(
         .transform(barrier)
     )
     deg = node_w.groupBy("node").agg(F.sum("w").alias("d"))
-    sig = summarize_graph_lsh(edges, src, dst, k_hashes, hash_mode)["assign"]
+    sig = summarize_graph_lsh(edges, src, dst, k_hashes)["assign"]
     sig = sig.select("node", F.col("supernode").alias("g"))
     ok = (
         sig.groupBy("g")
@@ -556,7 +542,6 @@ def kgrass_merge_round(
     src: str = "src",
     dst: str = "dst",
     k: int = 8,
-    hash_mode: str = "xxhash",
     max_group: int = 500,
 ) -> dict:
     """One kGrass merge-refinement round: within-bucket agglomeration by
@@ -589,7 +574,7 @@ def kgrass_merge_round(
     {'assign': (node, supernode), 'losses': (g, u, v, loss)}.
     """
     e0 = edges.select(src, dst).dropDuplicates([src, dst]).transform(barrier)
-    sig = kgrass_summarize(e0, src, dst, k=k, hash_mode=hash_mode)["assign"]
+    sig = kgrass_summarize(e0, src, dst, k=k)["assign"]
     srcs = e0.select(F.col(src).alias("node")).distinct()
     grp = (
         sig.withColumnRenamed("supernode", "g")
@@ -649,7 +634,6 @@ def dpgs_summarize(
     src: str = "src",
     dst: str = "dst",
     k_hashes: int = 4,
-    hash_mode: str = "xxhash",
     max_group: int = 500,
     quant: float = 1000.0,
     max_rounds: int = 8,
@@ -676,7 +660,7 @@ def dpgs_summarize(
     history: list[dict] = []
     for r in range(max_rounds):
         res = dpgs_merge_round(
-            cur, "src", "dst", k_hashes, hash_mode, max_group, quant
+            cur, "src", "dst", k_hashes, max_group, quant
         )
         n_pos = res["gains"].count()
         history.append({"round": r, "positive_pairs": n_pos})

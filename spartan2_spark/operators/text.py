@@ -136,7 +136,7 @@ _POLY_M = 1000003
 def _poly_hash(col):
     """Engine-portable polynomial string hash: fold (h*31 + code) mod p
     over the characters — bit-identical in any SQL engine with BIGINT
-    arithmetic (the cross-checkable alternative to xxhash64)."""
+    arithmetic, so the DuckDB oracle twins reproduce it."""
     return F.aggregate(
         F.split(col, ""),
         F.lit(0).cast("long"),
@@ -149,31 +149,21 @@ def fingerprint_bottom_k(
     text_col: str = "text",
     shingle_n: int = 8,
     k: int = 16,
-    hash_mode: str = "xxhash",
 ) -> DataFrame:
     """Document fingerprint: bottom-k of rolling char-shingle hashes
     (a winnowing-family content sketch; two docs' fingerprint overlap
     estimates their containment).
 
-    ``hash_mode='xxhash'`` (default, fastest, JVM intrinsic) or
-    ``'poly'`` (portable polynomial hash — same values computable in
-    any engine, used by the DuckDB oracle twin)."""
+    Shingles hash with the portable polynomial hash, so the DuckDB
+    oracle twin computes the same values."""
     from spartan2_spark.operators.dedup import char_shingles_expr
 
-    shingles = char_shingles_expr(text_col, shingle_n)
-    if hash_mode == "poly":
-        hashes = F.transform(shingles, _poly_hash)
-        combine = lambda acc, h: (acc * _POLY_M + h) % _POLY_P  # noqa: E731
-        fp_hash = F.aggregate(
-            F.col("fingerprint"), F.lit(0).cast("long"), combine
-        )
-    elif hash_mode == "xxhash":
-        hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-        fp_hash = F.xxhash64(
-            F.concat_ws(",", F.transform("fingerprint", lambda x: x.cast("string")))
-        )
-    else:
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    hashes = F.transform(char_shingles_expr(text_col, shingle_n), _poly_hash)
+    fp_hash = F.aggregate(
+        F.col("fingerprint"),
+        F.lit(0).cast("long"),
+        lambda acc, h: (acc * _POLY_M + h) % _POLY_P,
+    )
     bottom_k = F.slice(F.sort_array(hashes), 1, k)
     return df.withColumn("fingerprint", bottom_k).withColumn("fp_hash", fp_hash)
 

@@ -2385,11 +2385,15 @@ def mann_kendall(
 
     ``max_series_points`` makes the retention-bound assumption LOUD
     (r4 verdict: a convention-only cap can be silently dropped by a
-    future edit): a key longer than the cap raises before the pair
-    join runs — the 10k default is ~5e7 pairs in ONE task, the edge of
-    reasonable; pre-aggregate to a coarser tier or thin
-    (:func:`theilsen_trend`-style) instead of raising the cap.
+    future edit): the action fails on a key longer than the cap before
+    that key's pairs are formed — the 10k default is ~5e7 pairs in ONE
+    task, the edge of reasonable; pre-aggregate to a coarser tier or
+    thin (:func:`theilsen_trend`-style) instead of raising the cap.
+    The check is a lazy ``assert_true`` on a per-key count window, which
+    rides the pair join's own key exchange: no job at construction.
     """
+    from pyspark.sql import Window
+
     from spartan2_spark.operators.barrier import barrier
 
     # barrier: both self-join sides reference this relation — without
@@ -2400,20 +2404,21 @@ def mann_kendall(
         F.col(order_col).cast("long").alias("t"),
         F.col(value_col).cast("long").alias("v"),
     ).transform(barrier)
-    longest = (
-        s.groupBy("key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n"))
-        .collect()[0][0]
-    ) or 0
-    if longest > int(max_series_points):
-        raise ValueError(
-            f"mann_kendall: a series has {longest} points "
-            f"(> max_series_points={max_series_points}); the per-key "
-            "pair join would be quadratic in that length — aggregate "
-            "to a coarser tier or thin the series first"
-        )
-    a, b = s.alias("a"), s.alias("b")
+    too_long = F.concat(
+        F.lit("mann_kendall: a series has "),
+        F.col("n").cast("string"),
+        F.lit(
+            f" points (> max_series_points={max_series_points}); the "
+            "per-key pair join would be quadratic in that length — "
+            "aggregate to a coarser tier or thin the series first"
+        ),
+    )
+    capped = (
+        s.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("key")))
+        .where(F.assert_true(F.col("n") <= int(max_series_points), too_long).isNull())
+        .drop("n")
+    )
+    a, b = capped.alias("a"), s.alias("b")
     pairs = a.join(b, on="key").where(F.col("a.t") < F.col("b.t"))
     sgn = (
         F.when(F.col("b.v") > F.col("a.v"), 1)

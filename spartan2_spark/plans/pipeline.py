@@ -68,9 +68,11 @@ def _run_stage(
     resume: bool,
     upstream: dict[str, int] | None = None,
     fingerprint: int | None = None,
-) -> dict:
+) -> tuple[dict, DataFrame]:
     """Stage protocol: resume-prune input -> build -> dynamic-overwrite
     write -> per-partition lineage -> manifest merge -> version bump.
+    Returns the stage report and the stage's table, read with the
+    schema the build wrote, so no reader infers it from the files.
 
     With ``fingerprint`` set the stage is a full rebuild (t1w,
     gapfill_1h): every output partition depends on every input
@@ -111,15 +113,18 @@ def _run_stage(
     def not_done(df: DataFrame, col) -> DataFrame:
         return df.filter(~col.cast("string").isin(sorted(done))) if done else df
 
-    if fingerprint is None or not done:
-        out_df = build(not_done(input_df, input_dt_col))
+    write = fingerprint is None or not done
+    # a skipped full rebuild builds too: its plan is lazy and gives the
+    # table's schema without running a job
+    out_df = build(not_done(input_df, input_dt_col) if write else input_df)
+    if write:
         out_df.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic" if fingerprint is None else "static"
         ).partitionBy("dt").parquet(out_dir)
-
-        # read back with the schema just written: no inference job
-        written = spark.read.schema(out_df.schema).parquet(out_dir)
-        new = not_done(written, F.col("dt"))
+    # read with the schema just written: no inference job
+    table = spark.read.schema(out_df.schema).parquet(out_dir)
+    if write:
+        new = not_done(table, F.col("dt"))
         if upstream:
             # a dt on disk but absent from the upstream lineage was NOT
             # rewritten by this run (dynamic overwrite only touches dts
@@ -148,7 +153,7 @@ def _run_stage(
         "skipped_partitions": len(done),
         "version": version,
         "wall_sec": round(_time.time() - t_start, 3),
-    }
+    }, table
 
 
 def run_pipeline(
@@ -178,7 +183,14 @@ def run_pipeline(
     """
     os.makedirs(out_root, exist_ok=True)
     reports = []
+    # each stage's table, read with its written schema: the downstream
+    # stages' input, with no schema-inference job
+    tables: dict[str, DataFrame] = {}
     pages_version = 1  # external input table: pinned snapshot
+
+    def stage(name: str, *args, **kwargs) -> None:
+        report, tables[name] = _run_stage(spark, out_root, name, *args, **kwargs)
+        reports.append(report)
 
     if detect_late_data and resume:
         pages_crcs = {
@@ -195,14 +207,12 @@ def run_pipeline(
         canon_crcs = None
 
     # -- canonical text per url (byte-identical invariant; crc in manifest)
-    reports.append(
-        _run_stage(
-            spark, out_root, "canonical",
-            pages, F.lit("ALL"),
-            lambda df: R.canonical_text(df).withColumn("dt", F.lit("ALL")),
-            pages_version, resume,
-            upstream=canon_crcs,
-        )
+    stage(
+        "canonical",
+        pages, F.lit("ALL"),
+        lambda df: R.canonical_text(df).withColumn("dt", F.lit("ALL")),
+        pages_version, resume,
+        upstream=canon_crcs,
     )
 
     # -- raw -> 1m, with explicit salted partitioning for head domains
@@ -212,13 +222,11 @@ def run_pipeline(
             "dt", F.to_date("bucket_ts")
         )
 
-    reports.append(
-        _run_stage(
-            spark, out_root, "t1m",
-            pages, F.to_date("warc_ts"),
-            build_t1m, pages_version, resume,
-            upstream=pages_crcs,
-        )
+    stage(
+        "t1m",
+        pages, F.to_date("warc_ts"),
+        build_t1m, pages_version, resume,
+        upstream=pages_crcs,
     )
 
     # -- 1m -> 1h -> 1d from stored state only (per-dt lineage
@@ -226,17 +234,14 @@ def run_pipeline(
     # output dts coincide — a day tier row rebuilds from that day's
     # hour rows only)
     for src, dst, tier in (("t1m", "t1h", "1h"), ("t1h", "t1d", "1d")):
-        src_dir = os.path.join(out_root, src)
-        reports.append(
-            _run_stage(
-                spark, out_root, dst,
-                spark.read.parquet(src_dir), F.col("dt"),
-                lambda df, t=tier: R.rollup_tier_up(df.drop("dt"), t).withColumn(
-                    "dt", F.to_date("bucket_ts")
-                ),
-                M.table_version(src_dir), resume,
-                upstream=M.upstream_crcs(out_root, src),
-            )
+        stage(
+            dst,
+            tables[src], F.col("dt"),
+            lambda df, t=tier: R.rollup_tier_up(df.drop("dt"), t).withColumn(
+                "dt", F.to_date("bucket_ts")
+            ),
+            M.table_version(os.path.join(out_root, src)), resume,
+            upstream=M.upstream_crcs(out_root, src),
         )
 
     # -- opt-in 1w long-retention hop: a full rebuild like the gapfill
@@ -248,24 +253,19 @@ def run_pipeline(
     # rebuild-on-any-t1d-change is cheap and keeps resume exact: the
     # stage is pinned to a fingerprint of the whole t1d manifest.
     if week_tier:
-        t1d_dir = os.path.join(out_root, "t1d")
-        reports.append(
-            _run_stage(
-                spark, out_root, "t1w",
-                spark.read.parquet(t1d_dir), None,
-                lambda df: R.rollup_tier_up(df.drop("dt"), "1w").withColumn(
-                    "dt", F.to_date("bucket_ts")
-                ),
-                M.table_version(t1d_dir), resume,
-                fingerprint=_fingerprint(M.upstream_crcs(out_root, "t1d")),
-            )
+        stage(
+            "t1w",
+            tables["t1d"], None,
+            lambda df: R.rollup_tier_up(df.drop("dt"), "1w").withColumn(
+                "dt", F.to_date("bucket_ts")
+            ),
+            M.table_version(os.path.join(out_root, "t1d")), resume,
+            fingerprint=_fingerprint(M.upstream_crcs(out_root, "t1d")),
         )
 
     # -- gap-filled 1h view (materialized for readers/BeatLex).
     # Interpolation crosses dates -> a full rebuild, pinned to a
     # fingerprint of the whole upstream manifest.
-    t1h_dir = os.path.join(out_root, "t1h")
-
     def build_gap(df):
         # cluster the scan by url ONCE: HashPartitioning(url) satisfies
         # both the tier_view groupBy(url, bucket_ts) clustering AND the
@@ -282,26 +282,21 @@ def run_pipeline(
             method="interp",
         ).withColumn("dt", F.to_date("bucket_ts"))
 
-    reports.append(
-        _run_stage(
-            spark, out_root, "gapfill_1h",
-            spark.read.parquet(t1h_dir), None,
-            build_gap, M.table_version(t1h_dir), resume,
-            fingerprint=_fingerprint(M.upstream_crcs(out_root, "t1h")),
-        )
+    stage(
+        "gapfill_1h",
+        tables["t1h"], None,
+        build_gap, M.table_version(os.path.join(out_root, "t1h")), resume,
+        fingerprint=_fingerprint(M.upstream_crcs(out_root, "t1h")),
     )
 
     # -- Gorilla blocks for the 1h tier (per url x dt; dt-resumable)
-    gap_dir = os.path.join(out_root, "gapfill_1h")
-    reports.append(
-        _run_stage(
-            spark, out_root, "blocks_1h",
-            spark.read.parquet(gap_dir), F.col("dt"),
-            lambda df: GO.encode_tier_blocks(
-                df, "1h", value_col="vmean", extra_group_cols=("dt",)
-            ),
-            M.table_version(gap_dir), resume,
-            upstream=M.upstream_crcs(out_root, "gapfill_1h"),
-        )
+    stage(
+        "blocks_1h",
+        tables["gapfill_1h"], F.col("dt"),
+        lambda df: GO.encode_tier_blocks(
+            df, "1h", value_col="vmean", extra_group_cols=("dt",)
+        ),
+        M.table_version(os.path.join(out_root, "gapfill_1h")), resume,
+        upstream=M.upstream_crcs(out_root, "gapfill_1h"),
     )
     return reports

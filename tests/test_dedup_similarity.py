@@ -603,10 +603,11 @@ def test_sorted_neighborhood_pairs_window_and_determinism(spark):
     assert {(r.id_a, r.id_b): r.rank_gap for r in out2.collect()} == got
 
 
-def test_minhash_arrow_sql_parity(spark):
-    """The mapInArrow poly-mode fast path must produce IDENTICAL pairs,
-    jaccards, and underlying hv/sig values to the SQL formulation —
-    including short (<n chars), empty, and non-ASCII documents."""
+def test_minhash_verify_join_matches_broadcast(spark, monkeypatch):
+    """Past the broadcast cap the verify shuffle-joins the hash sets;
+    that branch must give IDENTICAL pairs and jaccards to the broadcast
+    kernel — including short (<n chars), empty, and non-ASCII
+    documents."""
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
         (2, "the quick brown fox jumps over the lazy dogs"),
@@ -617,15 +618,12 @@ def test_minhash_arrow_sql_parity(spark):
         (7, "abc"),  # identical short doc -> J=1 pair with 3
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(k=16, bands=4, jaccard_threshold=0.1, hash_mode="poly")
-    arrow = sorted(
-        map(tuple, DD.minhash_lsh_pairs(d, use_arrow=True, **kw).collect())
-    )
-    sql = sorted(
-        map(tuple, DD.minhash_lsh_pairs(d, use_arrow=False, **kw).collect())
-    )
-    assert arrow == sql
-    assert (3, 7, 1.0) in [(a, b, j) for a, b, j in arrow]
+    kw = dict(k=16, bands=4, jaccard_threshold=0.1)
+    broadcast = sorted(map(tuple, DD.minhash_lsh_pairs(d, **kw).collect()))
+    monkeypatch.setattr(DD, "_VERIFY_BROADCAST_BYTES", 0)
+    joined = sorted(map(tuple, DD.minhash_lsh_pairs(d, **kw).collect()))
+    assert joined == broadcast
+    assert (3, 7, 1.0) in broadcast
 
 
 def test_minhash_arrow_kernel_values_match_sql_exprs(spark):
@@ -654,7 +652,7 @@ def test_minhash_arrow_kernel_values_match_sql_exprs(spark):
 
     def _slot(j):
         # single-parameter lambda: a second parameter would be bound to
-        # the ARRAY INDEX by PySpark (see dedup.minhash_signature note)
+        # the ARRAY INDEX by PySpark
         return F.array_min(
             F.transform(
                 F.col("hv"),
@@ -864,7 +862,7 @@ def test_dedup_keep_best_keeps_longest(spark):
     ]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
     out = {r.id: r for r in dedup_keep_best(
-        df, k=16, bands=8, jaccard_threshold=0.5, hash_mode="poly"
+        df, k=16, bands=8, jaccard_threshold=0.5
     ).collect()}
     assert out[1].cluster == out[2].cluster == 1  # min-label component
     assert out[2].keep == 1 and out[1].keep == 0  # longest wins, not min id

@@ -72,6 +72,28 @@ def test_progressive_rejected_loudly():
         decode_jpeg(b"not a jpeg")
 
 
+def test_non_divisor_sampling_rejected_loudly():
+    """3x1 luma over 2x1 chroma has no integer upsampling factor: the
+    decoder must raise, not return mis-scaled planes."""
+    buf = bytearray(encode_jpeg(_gradient(16, 16, 3)))
+    i = buf.find(b"\xff\xc0")
+    buf[i + 11] = 0x31  # component 1 (Y): h=3, v=1
+    buf[i + 14] = 0x21  # component 2 (Cb): h=2, v=1
+    with pytest.raises(ValueError, match="sampling"):
+        decode_jpeg(bytes(buf))
+
+
+def test_fill_bytes_before_markers_are_skipped():
+    """0xFF fill bytes may precede any marker (T.81 B.1.1.2)."""
+    buf = encode_jpeg(_gradient(17, 19, 3), quality=90)
+    padded = buf
+    for marker in (b"\xff\xda", b"\xff\xc0", b"\xff\xdb"):
+        i = padded.find(marker)
+        padded = padded[:i] + b"\xff\xff\xff" + padded[i:]
+    assert padded != buf
+    assert np.array_equal(decode_jpeg(padded), decode_jpeg(buf))
+
+
 # known cpython/IPython sample locations (existence-checked, never
 # globbed recursively — huge trees); skip-if-absent keeps the test
 # self-contained on hosts without them

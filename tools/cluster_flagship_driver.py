@@ -133,11 +133,8 @@ def main() -> None:
         # a loose band layout would pair nearly everything; r=8 keeps
         # candidates focused on genuine near-dups (url revisions,
         # same-length siblings)
-        # poly mode engages the r4 mapInArrow signature kernel (the
-        # gate/twin path); xxhash would exercise the legacy SQL slots
         pairs = minhash_lsh_pairs(
-            docs, "text", "doc_id", k=64, bands=8, jaccard_threshold=0.8,
-            hash_mode="poly",
+            docs, "text", "doc_id", k=64, bands=8, jaccard_threshold=0.8
         )
         chk = pairs.agg(
             F.count(F.lit(1)).alias("n"),
