@@ -5922,13 +5922,14 @@ def _q_eaglemine_describe_trunc(spark, sf_dir):
     )
 
 
-_PHI_SQL = """0.5 * (1 + CASE WHEN ({z}) < 0 THEN -1 ELSE 1 END * (1 -
+# floored at 1e-300 like histogram._std_normal_cdf, so ln(Phi) is finite
+_PHI_SQL = """greatest(0.5 * (1 + CASE WHEN ({z}) < 0 THEN -1 ELSE 1 END * (1 -
     ((((1.061405429 * (1 / (1 + 0.3275911 * (abs({z}) / sqrt(2)))) - 1.453152027)
        * (1 / (1 + 0.3275911 * (abs({z}) / sqrt(2)))) + 1.421413741)
        * (1 / (1 + 0.3275911 * (abs({z}) / sqrt(2)))) - 0.284496736)
        * (1 / (1 + 0.3275911 * (abs({z}) / sqrt(2)))) + 0.254829592)
        * (1 / (1 + 0.3275911 * (abs({z}) / sqrt(2))))
-       * exp(-(abs({z}) / sqrt(2)) * (abs({z}) / sqrt(2)))))"""
+       * exp(-(abs({z}) / sqrt(2)) * (abs({z}) / sqrt(2))))), 1e-300)"""
 
 
 def _eaglemine_desc_trunc_sql() -> str:
@@ -6314,13 +6315,15 @@ def _q_eaglemine_anderson(spark, sf_dir):
     )
 
 
-def _eaglemine_anderson_sql() -> str:
+def _anderson_sql(cells: str) -> str:
+    """The A-D CTEs and final SELECT over ``cells``, a relation of
+    (level, node, bin_x, bin_y, cnt): the twin of
+    histogram.anderson_islands for any island tree."""
     phi_pos = _PHI_SQL.format(z="z.z")
     phi_neg = _PHI_SQL.format(z="-z.z")
-    return _EAGLEMINE_TREE_CTES + f"""
-    , tree AS (SELECT o.level, o.node, c.bin_x, c.bin_y, c.cnt,
-                      round(log2(CAST(c.cnt AS DOUBLE) + 1.0) * 100.0, 0) AS wv
-               FROM surv o JOIN c ON c.cid = o.cid),
+    return f"""tree AS (SELECT level, node, bin_x, bin_y, cnt,
+                      round(log2(CAST(cnt AS DOUBLE) + 1.0) * 100.0, 0) AS wv
+               FROM {cells}),
     m AS (SELECT level, node, CAST(sum(cnt) AS BIGINT) AS mass,
                  sum(wv) AS W,
                  sum(wv * (bin_x + 0.5)) AS sx,
@@ -6398,7 +6401,10 @@ def _eaglemine_anderson_sql() -> str:
 """
 
 
-_EAGLEMINE_ANDERSON_SQL = _eaglemine_anderson_sql()
+_EAGLEMINE_ANDERSON_SQL = _EAGLEMINE_TREE_CTES + "\n    , " + _anderson_sql(
+    "(SELECT o.level, o.node, c.bin_x, c.bin_y, c.cnt"
+    " FROM surv o JOIN c ON c.cid = o.cid)"
+)
 for _cte in ("c AS (", "alive AS (", "lab AS (", "surv AS (", "tree AS (",
              "grp AS (", "st AS ("):
     _EAGLEMINE_ANDERSON_SQL = _EAGLEMINE_ANDERSON_SQL.replace(
@@ -6892,7 +6898,7 @@ def _q_mix_alpha(spark, sf_dir):
     (partitioning.mix_alpha_weights, the mT5/XGLM alpha-sampling
     design): per event-type stratum, p ~ n^alpha with the weight
     quantized to a 1e6 BIGINT before the integer-normalizer sum;
-    p and epochs raw single divides, quota an exact floor."""
+    p and epochs raw single divides, quota an exact integer division."""
     from spartan2_spark.operators.partitioning import mix_alpha_weights
 
     ev = _events(spark, sf_dir).select(F.col("event_type").alias("source"))
@@ -6909,8 +6915,7 @@ _MIX_ALPHA_SQL = """
     t AS (SELECT CAST(sum(wq) AS BIGINT) AS wq_total FROM w),
     q AS (SELECT stratum, n, wq,
                  CAST(wq AS DOUBLE) / wq_total AS p,
-                 CAST(floor(CAST(wq * 100000 AS DOUBLE) / wq_total) AS BIGINT)
-                   AS quota
+                 CAST(CAST(wq AS HUGEINT) * 100000 // wq_total AS BIGINT) AS quota
           FROM w CROSS JOIN t)
     SELECT stratum, n, wq, p, quota,
            CAST(quota AS DOUBLE) / n AS epochs

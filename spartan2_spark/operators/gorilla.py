@@ -15,6 +15,7 @@ before the final per-url regroup.
 
 from __future__ import annotations
 
+import datetime
 from typing import Iterator
 
 import numpy as np
@@ -35,6 +36,9 @@ __all__ = [
     "rle_plan",
 ]
 
+_DAY_S = 86_400
+_EPOCH_DATE = datetime.date(1970, 1, 1)
+
 
 def encode_tier_blocks(
     view: DataFrame,
@@ -48,6 +52,11 @@ def encode_tier_blocks(
     ``extra_group_cols`` (e.g. ``("dt",)``) bound a block to one output
     partition so the pipeline's per-dt manifest/resume unit holds; the
     extra columns are carried through to the output.
+
+    A ``dt`` group column must be the UTC date of every point it groups
+    (``run_pipeline`` writes ``dt = to_date(bucket_ts)`` in its UTC
+    session and groups by ``("dt",)``): then every block lies inside
+    its ``dt`` day, the rule :func:`read_points` prunes by.
     """
     from pyspark.sql import types as T
 
@@ -215,6 +224,31 @@ def decode_blocks(blocks: DataFrame, value_col: str = "value") -> DataFrame:
     return blocks.mapInPandas(decode_batch, out_schema)
 
 
+def _utc_day(t: int) -> datetime.date:
+    """Epoch seconds -> UTC date by floor division; no timezone involved."""
+    return _EPOCH_DATE + datetime.timedelta(days=int(t) // _DAY_S)
+
+
+def _prune_days(b: DataFrame, t0: int | None, t1: int | None) -> DataFrame:
+    """Partition predicate ``utc_day(t0) <= dt <= utc_day(t1)`` on a
+    block table, plus a lazy guard that each surviving block lies
+    inside its ``dt`` day (the rule the predicate relies on)."""
+    if t0 is not None:
+        b = b.filter(F.col("dt") >= F.lit(_utc_day(t0)))
+    if t1 is not None:
+        b = b.filter(F.col("dt") <= F.lit(_utc_day(t1)))
+    day = F.unix_date(F.col("dt"))
+    inside = (F.floor(F.col("start_ts") / _DAY_S) == day) & (
+        F.floor(F.col("end_ts") / _DAY_S) == day
+    )
+    outside = F.format_string(
+        "read_points: block url=%s start_ts=%d end_ts=%d is not inside its "
+        "dt=%s (UTC day); date pruning would drop blocks of this table",
+        "url", "start_ts", "end_ts", F.col("dt").cast("string"),
+    )
+    return b.filter(F.assert_true(inside, outside).isNull())
+
+
 def read_points(
     blocks: DataFrame,
     t0: int | None = None,
@@ -225,13 +259,28 @@ def read_points(
     """Serving read over a block table: prune BEFORE any decode.
 
     Every block row carries (url, start_ts, end_ts), so a time-range
-    read filters blocks on [start_ts, end_ts] overlap with [t0, t1] —
+    read filters blocks on [start_ts, end_ts] overlap with [t0, t1].
     Catalyst pushes the comparison to the parquet scan of the block
-    table (min/max row-group stats prune whole files under the
-    range-on-warc_ts layout) — and only the surviving blocks reach the
-    Python decode kernel. At 100 TB this is the difference between
-    decoding a day and decoding a decade. Decoded points are then
-    trimmed to the exact range (a block may straddle the boundary).
+    table, where min/max row-group stats skip row groups inside a scan
+    task; every file still starts a task, and every task a Python
+    decode worker. Only the surviving blocks reach the decode kernel,
+    and decoded points are then trimmed to the exact range (a block
+    may straddle the boundary).
+
+    Date pruning: a ``dt`` column on a block table is the UTC date of
+    every point of its block (``run_pipeline`` writes ``dt =
+    to_date(bucket_ts)`` and groups blocks by ``("dt",)``; any tier
+    whose ``dt`` is ``to_date(bucket_ts)``, ``t1w`` included, keeps
+    it). A block overlapping the range has ``end_ts >= t0`` and
+    ``start_ts <= t1`` and lies inside its ``dt`` day, so ``day(t0) <=
+    dt <= day(t1)`` drops no block the read needs. On a ``dt``-
+    partitioned table Spark applies that bound at planning and lists
+    only the read's date directories: a one-day read runs one decode
+    task, not one per stored day. Days are floor(epoch seconds /
+    86400), so the session timezone does not change the prune. A lazy
+    ``assert_true`` fails the read's action if a surviving block is
+    not inside its ``dt`` day. Tables without ``dt`` keep the plain
+    range filter.
 
     ``urls``: a small list (becomes an IN filter, scan-pushed) or a
     DataFrame with a ``url`` column (broadcast-hinted LEFT SEMI join —
@@ -242,6 +291,8 @@ def read_points(
         b = b.filter(F.col("end_ts") >= F.lit(int(t0)))
     if t1 is not None:
         b = b.filter(F.col("start_ts") <= F.lit(int(t1)))
+    if "dt" in b.columns and (t0 is not None or t1 is not None):
+        b = _prune_days(b, t0, t1)
     if urls is not None:
         if isinstance(urls, DataFrame):
             b = b.join(F.broadcast(urls.select("url").distinct()), "url", "left_semi")

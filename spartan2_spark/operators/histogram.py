@@ -485,16 +485,24 @@ _ERF_P = 0.3275911
 _ERF_A = (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
 
 
+# Phi's floor on both engines. 0.5*(1 - erf_abs) cancels to exactly 0
+# for z below about -8.5, and Spark's log(0) is NULL (skipped by sum)
+# while DuckDB's ln(0) raises. Every nonzero Phi is >= 2^-54, so the
+# floor changes only Phi == 0 and leaves differences of Phi exact.
+_PHI_FLOOR = 1e-300
+
+
 def _std_normal_cdf(z):
     """Phi(z) = 0.5*(1 + erf(z/sqrt(2))) as a column expression, via the
-    A&S 7.1.26 polynomial (same Horner order as the SQL twin)."""
+    A&S 7.1.26 polynomial (same Horner order as the SQL twin), floored
+    at ``_PHI_FLOOR`` so its log is finite."""
     x = F.abs(z) / math.sqrt(2.0)
     t = 1.0 / (1.0 + _ERF_P * x)
     a1, a2, a3, a4, a5 = _ERF_A
     poly = ((((a5 * t + a4) * t + a3) * t + a2) * t + a1) * t
     erf_abs = 1.0 - poly * F.exp(-x * x)
     erf = F.when(z < 0, -erf_abs).otherwise(erf_abs)
-    return 0.5 * (1.0 + erf)
+    return F.greatest(0.5 * (1.0 + erf), F.lit(_PHI_FLOOR))
 
 
 def _dtm_loss(cells: DataFrame, prm: DataFrame) -> DataFrame:

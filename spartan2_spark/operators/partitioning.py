@@ -401,7 +401,8 @@ def mix_alpha_weights(
     stratum's weight is quantized to a 1e6-scaled BIGINT FIRST; the
     normalizer is then an exact integer sum (order-independent), and
     ``p`` / ``epochs`` are raw single divides of exact integers — same
-    contract as doc_entropy / lm_perplexity.
+    contract as doc_entropy / lm_perplexity. ``quota`` is the exact
+    integer floor of ``wq * target_total / wq_total``.
 
     Scale: one map-side-combinable aggregate over the corpus, then
     arithmetic on the strata-sized relation. Strata counts are exact,
@@ -428,9 +429,10 @@ def mix_alpha_weights(
         (F.col("wq") / F.col("wq_total")).alias("p"),
     ]
     if target_total is not None:
-        quota = F.floor(
-            (F.col("wq") * F.lit(int(target_total))).cast("double")
-            / F.col("wq_total").cast("double")
+        # exact past 2^53: wq * target_total in decimal(38,0), then
+        # integer division (the twin uses DuckDB's 128-bit HUGEINT)
+        quota = F.expr(
+            f"CAST(wq AS DECIMAL(38,0)) * {int(target_total)} div wq_total"
         ).cast("long")
         cols += [
             quota.alias("quota"),

@@ -20,3 +20,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def block_store(spark, tmp_path_factory):
+    """A small three-day store built by ``run_pipeline``; returns the
+    path of its ``blocks_1h`` table (partitioned by ``dt``)."""
+    from spartan2_spark.datagen import synth_pages
+    from spartan2_spark.plans.pipeline import run_pipeline
+
+    root = str(tmp_path_factory.mktemp("block_store"))
+    run_pipeline(spark, synth_pages(spark, 2000, n_urls=12, days=3), root)
+    return os.path.join(root, "blocks_1h")

@@ -365,3 +365,104 @@ def test_xor_bitwidth_stats_known_windows(spark):
     assert r.max_mbits == 62
     assert r.mbits_total == 63
     assert r.bits_total == (13 + 1) + (13 + 62)
+
+
+_DAY = 86_400
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_read_points_date_pruning_matches_unpruned(spark, block_store):
+    """Reads over a dt-partitioned block table return exactly what the
+    same table without ``dt`` (the unpruned plan) returns, at the day
+    edges of the date bound."""
+    from pyspark.sql import functions as F
+
+    from spartan2_spark.operators import gorilla as GO
+
+    blocks = spark.read.parquet(block_store)
+    ref = blocks.drop("dt")
+    lo, hi = blocks.agg(F.min("start_ts"), F.max("end_ts")).first()
+    day1 = (lo // _DAY + 1) * _DAY  # the second stored day's midnight
+    some_ts = GO.read_points(blocks).agg(F.max("ts")).first()[0]
+    cases = [
+        (day1, None),  # t0 exactly at a UTC midnight
+        (None, day1 - 1),  # t1 one second before a midnight
+        (day1 - 3600, day1),  # t1 exactly at a midnight
+        (day1, day1),  # t0 == t1 at a midnight
+        (day1, day1 + _DAY - 1),  # exactly one day
+        (some_ts, some_ts),  # t0 == t1 on a stored point
+        (day1 - 5 * 3600, day1 + 5 * 3600),  # spans two days
+        (day1 + 3600, None),
+        (None, day1 + 3600),
+    ]
+    for t0, t1 in cases:
+        got = _sorted_rows(GO.read_points(blocks, t0=t0, t1=t1))
+        want = _sorted_rows(GO.read_points(ref, t0=t0, t1=t1))
+        assert got == want and got, (t0, t1)
+    urls = [r.url for r in blocks.select("url").distinct().limit(2).collect()]
+    assert _sorted_rows(
+        GO.read_points(blocks, t0=day1, t1=day1 + _DAY - 1, urls=urls)
+    ) == _sorted_rows(GO.read_points(ref, t0=day1, t1=day1 + _DAY - 1, urls=urls))
+    # a range outside the stored days returns nothing on either side
+    for t0, t1 in [(hi + 10 * _DAY, hi + 11 * _DAY), (lo - 3 * _DAY, lo - 1)]:
+        assert GO.read_points(blocks, t0=t0, t1=t1).count() == 0
+        assert GO.read_points(ref, t0=t0, t1=t1).count() == 0
+
+
+def test_read_points_date_prune_ignores_session_timezone(spark, block_store):
+    """Day bounds are epoch-second floor divisions: a session outside
+    UTC prunes to the same single date and returns the same points."""
+    from spartan2_spark.operators import gorilla as GO
+
+    blocks = spark.read.parquet(block_store)
+    lo = blocks.agg({"start_ts": "min"}).first()[0]
+    t0 = (lo // _DAY + 1) * _DAY
+    want = _sorted_rows(GO.read_points(blocks, t0=t0, t1=t0 + _DAY - 1))
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    for zone in ("America/Los_Angeles", "Asia/Kolkata"):
+        spark.conf.set("spark.sql.session.timeZone", zone)
+        try:
+            out = GO.read_points(blocks, t0=t0, t1=t0 + _DAY - 1)
+            assert out.rdd.getNumPartitions() == 1, zone
+            assert _sorted_rows(out) == want, zone
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_read_points_guard_fails_on_the_action(spark, block_store):
+    """A block table whose dt is not the day of its blocks raises when
+    the read runs; building the read starts no job."""
+    from pyspark.sql import functions as F
+
+    from spartan2_spark.operators import gorilla as GO
+
+    blocks = spark.read.parquet(block_store)
+    lo, hi = blocks.agg(F.min("start_ts"), F.max("end_ts")).first()
+    shifted = blocks.withColumn("dt", F.date_add("dt", 1))
+    sc = spark.sparkContext
+    sc.setJobGroup("read-points-guard", "construct only")
+    try:
+        bad = GO.read_points(shifted, t0=lo, t1=hi)
+        assert sc.statusTracker().getJobIdsForGroup("read-points-guard") == []
+    finally:
+        sc.setJobGroup("", "")
+    with pytest.raises(Exception, match="is not inside its dt"):
+        bad.collect()
+
+
+def test_pipeline_blocks_lie_inside_their_dt_day(spark, block_store):
+    """The rule date pruning relies on holds for a pipeline-built store:
+    every blocks_1h row starts and ends on its dt's UTC day."""
+    from pyspark.sql import functions as F
+
+    blocks = spark.read.parquet(block_store)
+    day = F.unix_date("dt")
+    outside = blocks.filter(
+        (F.floor(F.col("start_ts") / _DAY) != day)
+        | (F.floor(F.col("end_ts") / _DAY) != day)
+    )
+    assert blocks.select("dt").distinct().count() == 3
+    assert outside.count() == 0

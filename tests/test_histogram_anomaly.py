@@ -808,3 +808,36 @@ def test_anderson_islands_accept_and_reject_paths(spark):
     assert not out[2].accepted, (out[2].a2_1, out[2].a2_2, out[2].crit)
     with pytest.raises(ValueError):
         anderson_islands(tree, strictness=5)
+
+
+def test_anderson_islands_extreme_outlier_matches_duckdb_twin(spark):
+    """One far outlier on a ~1,500-cell island standardizes to |z| ~ 39,
+    where the A&S Phi is exactly 0. Phi's floor keeps ln(Phi) finite on
+    both engines: Spark gives a finite A^2 and the DuckDB twin the same
+    value (unfloored, Spark's log(0) is NULL and sum skips it, while
+    DuckDB's ln(0) raises)."""
+    import math
+
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as E
+    from spartan2_spark.operators.histogram import anderson_islands
+
+    rows = [(1, 7, x, y, 1 + (x * y) % 3) for x in range(39) for y in range(39)]
+    rows.append((1, 7, 10_000, 19, 1))
+    tree = spark.createDataFrame(
+        rows, "level int, node int, bin_x long, bin_y long, cnt long"
+    )
+    got = anderson_islands(tree, strictness=4).collect()
+    assert len(got) == 1 and got[0].n > 1500
+    a2 = (got[0].a2_1, got[0].a2_2)
+    assert all(v is not None and math.isfinite(v) for v in a2), a2
+
+    cells = pd.DataFrame(rows, columns=["level", "node", "bin_x", "bin_y", "cnt"])
+    con = duckdb.connect()
+    con.register("island", cells)
+    want = con.sql("WITH " + E._anderson_sql("island")).fetchall()
+    assert len(want) == 1
+    assert (round(a2[0], 6), round(a2[1], 6)) == (want[0][4], want[0][5])
+    assert (got[0].crit, got[0].accepted) == (want[0][6], want[0][7])

@@ -395,3 +395,23 @@ def test_mix_alpha_weights_temperature_semantics(spark):
 
     with pytest.raises(ValueError):
         mix_alpha_weights(df, "source", alpha=-0.1)
+
+
+def test_mix_alpha_quota_exact_past_2_pow_53(spark):
+    """quota = wq * T // wq_total exactly when wq * T passes 2^53 (where
+    a double quotient can round up across an integer) and 2^63 (where a
+    BIGINT product overflows)."""
+    from spartan2_spark.operators.partitioning import mix_alpha_weights
+
+    T = 10**12
+    # with these sizes the double quotient of stratum "a" is one too high
+    sizes = [("a", 285), ("b", 336), ("c", 424)]
+    for strata in (sizes, sizes + [("d", 10**9)]):
+        df = spark.createDataFrame(strata, "source string, tokens long")
+        out = mix_alpha_weights(
+            df, "source", size_col="tokens", alpha=0.3, target_total=T
+        ).collect()
+        wq_total = sum(r.wq for r in out)
+        assert max(r.wq for r in out) * T > 2**53
+        for r in out:
+            assert r.quota == r.wq * T // wq_total, (r.stratum, r.quota)

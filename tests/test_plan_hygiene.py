@@ -313,6 +313,26 @@ def test_read_points_prunes_blocks_at_the_scan(spark, tmp_path):
     ), plan
 
 
+def test_read_points_prunes_dt_partitions(spark, block_store):
+    """A one-day read over a dt-partitioned block table prunes whole
+    date directories at planning: its FileScan carries a dt
+    PartitionFilter and it runs one scan (and decode) task, where the
+    same table without dt runs one per stored day."""
+    from spartan2_spark.operators import gorilla as GO
+
+    blocks = spark.read.parquet(block_store)
+    lo = blocks.agg({"start_ts": "min"}).first()[0]
+    t0 = (lo // 86400 + 1) * 86400
+    out = GO.read_points(blocks, t0=t0, t1=t0 + 86399)
+    plan = plan_of(out)
+    parts = [l for l in plan.splitlines() if "PartitionFilters" in l]
+    assert parts and any("dt" in l for l in parts), plan
+    n_days = blocks.select("dt").distinct().count()
+    assert out.rdd.getNumPartitions() == 1
+    ref = GO.read_points(blocks.drop("dt"), t0=t0, t1=t0 + 86399)
+    assert ref.rdd.getNumPartitions() == n_days == 3
+
+
 def test_late_repair_bounds_broadcast_and_single_agg(spark, sf_dir):
     """The 1-row bounds aggregate must BROADCAST onto the scan (never
     shuffle the corpus against it) and the work-list reduce must be one
@@ -676,3 +696,35 @@ def test_cartesian_classifier_bounded_vs_risky(spark, sf_dir):
     b2, r2 = bounded_cartesians(plan2)
     assert r2 >= 1, plan2
     assert b2 == 0
+
+
+def test_cartesian_over_a_barrier_is_risky(spark, sf_dir):
+    """A data-sized cartesian whose sides sit behind barrier() shows only
+    `Scan ExistingRDD` below it; the audit counts it risky, and the
+    eaglemine ladder join is bounded only under its reviewed name."""
+    import sys
+
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from plan_audit import audit_plan, cartesian_inputs
+
+    from spartan2_spark.operators.barrier import barrier
+
+    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        a = spark.read.parquet(f"{sf_dir}/lineitem.parquet").transform(barrier)
+        c = spark.read.parquet(f"{sf_dir}/orders.parquet").transform(barrier)
+        bad = a.join(c, a["l_orderkey"] > c["o_orderkey"])
+        plan = plan_of(bad, "simple")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    assert "FileScan parquet" not in plan and "Scan ExistingRDD" in plan, plan
+    assert cartesian_inputs(plan) == ["hidden"], plan
+    rec = audit_plan(plan)
+    assert rec["risky_cartesians"] == 1 and rec["bounded_cartesians"] == 0
+
+    ladder = plan_of(E.queries()["eaglemine_clusters"](spark, sf_dir), "simple")
+    assert "hidden" in cartesian_inputs(ladder)
+    assert audit_plan(ladder)["risky_cartesians"] >= 1
+    named = audit_plan(ladder, "eaglemine_clusters")
+    assert named["risky_cartesians"] == 0 and named["bounded_cartesians"] >= 1
