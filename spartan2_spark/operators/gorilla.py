@@ -129,60 +129,33 @@ def encode_tier_blocks(
     )
 
 
-def _parse_mem(s: str) -> int:
-    """Spark memory string ('48g', '512m', '4096') -> bytes."""
-    s = s.strip().lower()
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if s and s[-1] in mult:
-        return int(float(s[:-1]) * mult[s[-1]])
-    return int(s)  # plain number = bytes in Spark conf
+# decode_*_multi's window arrays cost ~9 bytes per block byte; cap the
+# block bytes handed to one lane-parallel pass so a fat Arrow batch of
+# max-size blocks keeps a decode task's kernel near 72 MB (every task
+# slot may run one concurrently).
+_DECODE_PASS_BYTES = 8 << 20
 
 
-def _decode_pass_budget(spark) -> int:
-    """Per-pass block-byte budget for the lane-parallel decoder.
-
-    Window arrays cost ~9 bytes per block byte, and every task slot of
-    an executor may run a decode pass concurrently — so budget ~15% of
-    per-slot memory for decode windows: slots * cap * 9 stays well
-    under executor heap however wide the executor is. Clamped to
-    [8 MiB, 64 MiB]; falls back to 64 MiB if the conf is unreadable.
-    """
-    try:
-        conf = spark.conf
-        mem_s = conf.get("spark.executor.memory", None)
-        cores_s = conf.get("spark.executor.cores", None)
-        if mem_s and cores_s:
-            per_slot = _parse_mem(mem_s) // max(1, int(cores_s))
-        else:
-            # local mode: all slots share the driver heap
-            import os
-            import re
-
-            mem = _parse_mem(conf.get("spark.driver.memory", "4g"))
-            m = re.match(r"local\[(\d+|\*)\]", conf.get("spark.master", "local[*]"))
-            if m and m.group(1) != "*":
-                slots = int(m.group(1))
-            else:
-                slots = os.cpu_count() or 8
-            per_slot = mem // max(1, slots)
-        budget = int(per_slot * 0.15) // 9
-        return max(8 << 20, min(64 << 20, budget))
-    except Exception:
-        return 64 << 20
+def _pass_cuts(sizes: list[int], cap: int) -> list[int]:
+    """Greedy pass boundaries over block byte sizes: ``[0, ..., n]``;
+    pass ``i`` is blocks ``cuts[i]:cuts[i+1]``. A pass closes before the
+    block that would take it past ``cap``; a block larger than ``cap``
+    gets a pass to itself."""
+    cuts = [0]
+    acc = 0
+    for i, sz in enumerate(sizes):
+        if acc + sz > cap and i > cuts[-1]:
+            cuts.append(i)
+            acc = 0
+        acc += sz
+    cuts.append(len(sizes))
+    return cuts
 
 
 def decode_blocks(blocks: DataFrame, value_col: str = "value") -> DataFrame:
     """GORILLA_BLOCKS rows -> (url, tier, ts, value) points via
     mapInPandas (decode is the read path; CRC verified per block)."""
     out_schema = f"url string, tier string, ts long, {value_col} double"
-
-    # decode_*_multi's window arrays cost ~9 bytes per block byte; cap
-    # the bytes handed to one lane-parallel pass so a fat Arrow batch of
-    # max-size blocks can't balloon the kernel past a few hundred MB.
-    # The cap is PER TASK, and an executor runs one decode task per
-    # slot concurrently — so scale it to per-slot executor memory at
-    # plan time (driver side) instead of a flat constant.
-    max_pass_bytes = _decode_pass_budget(blocks.sparkSession)
 
     def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -196,19 +169,9 @@ def decode_blocks(blocks: DataFrame, value_col: str = "value") -> DataFrame:
                 if C.block_crc(t, v) != crc:
                     raise ValueError(f"CRC mismatch for url={url} tier={tr}")
             ns = pdf["n_points"].to_numpy(np.int64)
-            sizes = np.fromiter(
-                (len(t) + len(v) for t, v in zip(tbufs, vbufs)),
-                np.int64,
-                count=len(tbufs),
+            cuts = _pass_cuts(
+                [len(t) + len(v) for t, v in zip(tbufs, vbufs)], _DECODE_PASS_BYTES
             )
-            cuts = [0]
-            acc = 0
-            for i, sz in enumerate(sizes.tolist()):
-                if acc + sz > max_pass_bytes and i > cuts[-1]:
-                    cuts.append(i)
-                    acc = 0
-                acc += sz
-            cuts.append(len(tbufs))
             # every block of the slice decodes in ONE lane-parallel
             # numpy pass (decode_*_multi) — no per-block Python
             for a, b in zip(cuts[:-1], cuts[1:]):
@@ -221,7 +184,10 @@ def decode_blocks(blocks: DataFrame, value_col: str = "value") -> DataFrame:
                     }
                 )
 
-    return blocks.mapInPandas(decode_batch, out_schema)
+    # only the columns the kernel reads cross into the Python worker
+    return blocks.select(
+        "url", "tier", "n_points", "ts_block", "val_block", "crc32"
+    ).mapInPandas(decode_batch, out_schema)
 
 
 def _utc_day(t: int) -> datetime.date:

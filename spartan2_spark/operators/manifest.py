@@ -9,9 +9,10 @@ matching the table's physical ``dt`` layout):
 
 ``value_crc`` is an order-independent content checksum
 (sum of pmod(xxhash64(all columns), 2^31)) so a resumed/re-run stage can
-be byte-audited; ``input_snapshot`` pins the upstream table version the
-partition was computed from (the Iceberg snapshot-id analogue — the
-sandbox table layer is a parquet directory with a version file).
+be byte-audited; ``input_snapshot`` records the upstream table version
+the partition was computed from (the Iceberg snapshot-id analogue — the
+sandbox table layer is a parquet directory with a version file). Resume
+validity is decided by the crc lineage, not by that version.
 
 Resume: ``completed_partitions`` names the stage's valid dts; a
 resumed stage filters them out of its input before any compute, so a
@@ -104,7 +105,6 @@ def upstream_crcs(root: str, src_stage: str) -> dict[str, int]:
 def completed_partitions(
     root: str,
     stage: str,
-    input_snapshot: int | None = None,
     upstream: dict[str, int] | None = None,
 ) -> set[str]:
     """dts already durably produced by this stage AND still valid.
@@ -114,7 +114,8 @@ def completed_partitions(
     crc it was computed from is unchanged — so one recomputed upstream
     date invalidates exactly one downstream date, never the whole table
     (incremental view maintenance, cf. the reference's delta
-    re-aggregation, edgepropertyAnalysis.py:184-213)."""
+    re-aggregation, edgepropertyAnalysis.py:184-213). Without
+    ``upstream`` the input is taken as frozen and every entry counts."""
     out = set()
     for e in read_manifest(root, stage):
         if e.get("expired_at") is not None:
@@ -122,8 +123,6 @@ def completed_partitions(
             # treat as durably complete so a resumed run never
             # resurrects data the policy dropped
             out.add(e["dt"])
-            continue
-        if input_snapshot is not None and e.get("input_snapshot") != input_snapshot:
             continue
         if upstream is not None and (
             e.get("input_crc") is None

@@ -28,7 +28,6 @@ __all__ = [
     "global_dense_ids",
     "ordered_prefix_sum",
     "global_row_numbers",
-    "write_bucketed",
     "zorder_key",
     "key_skew_profile",
     "gini_concentration",
@@ -192,45 +191,6 @@ def global_row_numbers(
     boundary placement."""
     return ordered_prefix_sum(df, order_cols, out_col=id_col).withColumn(
         id_col, (F.col(id_col) + F.lit(base - 1)).cast("long")
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: tuple[str, ...] = ("url",),
-    n_buckets: int = 32,
-    sort_cols: tuple[str, ...] = ("bucket_ts",),
-) -> None:
-    """Persist a tier table bucketed (and sorted) on its series key —
-    the co-located-join/agg layout (SURVEY.md §4.2 access-path row):
-    every later ``groupBy(url, ...)`` or url-equi-join over the table
-    reads pre-shuffled buckets and plans NO Exchange, which at the
-    10^12-row tier scale removes the dominant shuffle of every
-    tier-compaction and serving query. (Iceberg's bucket transform is
-    the cluster equivalent; the Spark bucketed table is the in-sandbox
-    realization of the same layout contract.)
-    """
-    # idempotent overwrite across sessions: a fresh in-memory catalog
-    # doesn't know a previous session's table, so saveAsTable would
-    # refuse the leftover warehouse location — drop both catalog entry
-    # and directory first (same overwrite semantics the manifest-resume
-    # contract assumes for tier sinks)
-    import os
-    import shutil
-
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    if wh.startswith("file:"):
-        wh = wh[len("file:"):]
-    shutil.rmtree(os.path.join(wh, table.lower()), ignore_errors=True)
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*sort_cols)
-        .format("parquet")
-        .saveAsTable(table)
     )
 
 

@@ -57,6 +57,17 @@ def _fingerprint(crcs: dict[str, int]) -> int:
     return zlib.crc32(";".join(f"{d}={c}" for d, c in sorted(crcs.items())).encode())
 
 
+def build_t1m(pages: DataFrame, target_rows_per_salt: int = 1_000_000) -> DataFrame:
+    """raw -> 1m with explicit salted partitioning for head domains.
+    The salted exchange carries the projected (url, ts, value) points,
+    not the page text; ``ts`` is ``warc_ts``, so every salt is the one
+    hash(url, warc_ts) gives."""
+    salted = P.salted_repartition(
+        R.raw_points(pages), target_rows_per_salt=target_rows_per_salt, ts_col="ts"
+    )
+    return R.rollup_from_points(salted, "1m").withColumn("dt", F.to_date("bucket_ts"))
+
+
 def _run_stage(
     spark: SparkSession,
     out_root: str,
@@ -94,16 +105,11 @@ def _run_stage(
     out_dir = os.path.join(out_root, stage)
     entries: list[dict] = []
     if fingerprint is None:
-        # with crc lineage chaining the snapshot pin is redundant (and
-        # would over-invalidate: an upstream rewrite that reproduced
-        # identical bytes bumps the version but not the crc) — crc
-        # decides alone.
-        snap_check = None if upstream is not None else input_snapshot
-        done = (
-            M.completed_partitions(out_root, stage, snap_check, upstream)
-            if resume
-            else set()
-        )
+        # crc lineage decides validity alone; ``input_snapshot`` is
+        # recorded in the entries, not compared (a version pin would
+        # over-invalidate: an upstream rewrite that reproduced identical
+        # bytes bumps the version but not the crc)
+        done = M.completed_partitions(out_root, stage, upstream) if resume else set()
     else:
         # a full rebuild is current as a whole or not at all
         man = M.read_manifest(out_root, stage) if resume else []
@@ -216,16 +222,10 @@ def run_pipeline(
     )
 
     # -- raw -> 1m, with explicit salted partitioning for head domains
-    def build_t1m(df):
-        salted = P.salted_repartition(df, target_rows_per_salt=target_rows_per_salt)
-        return R.rollup_from_points(R.raw_points(salted), "1m").withColumn(
-            "dt", F.to_date("bucket_ts")
-        )
-
     stage(
         "t1m",
         pages, F.to_date("warc_ts"),
-        build_t1m, pages_version, resume,
+        lambda df: build_t1m(df, target_rows_per_salt), pages_version, resume,
         upstream=pages_crcs,
     )
 

@@ -250,50 +250,24 @@ def test_vectorized_decoder_matches_sequential():
         o += n
 
 
-def test_decode_pass_budget_scales_to_slots():
-    """Budget = 15% of per-slot memory / 9B-per-block-byte, clamped to
-    [8 MiB, 64 MiB] — wide executors can't multiply the decode-window
-    footprint past the heap (ADVICE r2, operators/gorilla.py cap)."""
-    from spartan2_spark.operators.gorilla import _decode_pass_budget, _parse_mem
+@given(
+    st.lists(st.integers(min_value=0, max_value=300), min_size=0, max_size=60),
+    st.integers(min_value=1, max_value=500),
+)
+@settings(max_examples=200, deadline=None)
+def test_pass_cuts_cover_every_block_once_within_cap(sizes, cap):
+    """Decode passes partition the blocks in order, and no pass exceeds
+    the byte cap unless it is one block that alone does."""
+    from spartan2_spark.operators.gorilla import _pass_cuts
 
-    assert _parse_mem("48g") == 48 << 30
-    assert _parse_mem("512m") == 512 << 20
-    assert _parse_mem("1024") == 1024
-
-    class FakeConf:
-        def __init__(self, d):
-            self.d = d
-
-        def get(self, k, default=None):
-            return self.d.get(k, default)
-
-    class FakeSpark:
-        def __init__(self, d):
-            self.conf = FakeConf(d)
-
-    # executor 8g x 4 cores -> 2g/slot -> 0.15*2g/9 ~ 35.8 MiB
-    b = _decode_pass_budget(FakeSpark({"spark.executor.memory": "8g",
-                                       "spark.executor.cores": "4"}))
-    assert 30 << 20 < b < 40 << 20
-    # skinny executor: clamps to the 8 MiB floor
-    b = _decode_pass_budget(FakeSpark({"spark.executor.memory": "1g",
-                                       "spark.executor.cores": "8"}))
-    assert b == 8 << 20
-    # fat per-slot memory: clamps to the 64 MiB ceiling
-    b = _decode_pass_budget(FakeSpark({"spark.executor.memory": "64g",
-                                       "spark.executor.cores": "2"}))
-    assert b == 64 << 20
-    # local mode: driver heap shared across local[N] slots
-    b = _decode_pass_budget(FakeSpark({"spark.driver.memory": "48g",
-                                       "spark.master": "local[32]"}))
-    assert 20 << 20 < b <= 30 << 20
-    # unreadable conf -> safe default
-    class Boom:
-        @property
-        def conf(self):
-            raise RuntimeError
-
-    assert _decode_pass_budget(Boom()) == 64 << 20
+    cuts = _pass_cuts(sizes, cap)
+    assert cuts[0] == 0 and cuts[-1] == len(sizes)
+    passes = list(zip(cuts[:-1], cuts[1:]))
+    covered = [i for a, b in passes for i in range(a, b)]
+    assert covered == list(range(len(sizes)))
+    for a, b in passes:
+        assert b > a or not sizes
+        assert sum(sizes[a:b]) <= cap or b - a == 1
 
 
 def test_dod_bitwidth_stats_regular_grid_is_one_bit(spark):

@@ -62,29 +62,6 @@ def test_salted_repartition_deterministic_and_bounded(spark):
     assert cell < dom
 
 
-def test_bucketed_table_aggregates_without_exchange(spark):
-    """The co-located layout contract: a groupBy on the bucket key over
-    a bucketed tier table plans NO shuffle (Exchange)."""
-    import io as _io
-    from contextlib import redirect_stdout
-
-    from spartan2_spark.operators.partitioning import write_bucketed
-
-    pages = synth_pages(spark, 5_000, n_urls=50, days=1)
-    tier = pages.groupBy("url").agg(
-        F.count(F.lit(1)).alias("cnt"), F.max("warc_ts").alias("bucket_ts")
-    )
-    write_bucketed(tier, "t1m_bucketed", ("url",), 8, ("bucket_ts",))
-    agg = spark.table("t1m_bucketed").groupBy("url").agg(F.sum("cnt").alias("c"))
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        agg.explain("simple")
-    plan = buf.getvalue()
-    assert "Exchange" not in plan  # bucket layout satisfies the distribution
-    assert agg.count() == 50
-    spark.sql("DROP TABLE t1m_bucketed")
-
-
 def test_global_dense_ids_order_and_parallelism_invariance(spark):
     keys = spark.createDataFrame(
         [(f"k{i:04d}",) for i in range(997)], "node_key string"

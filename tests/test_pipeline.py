@@ -246,7 +246,7 @@ def test_vanished_upstream_dt_is_not_laundered_into_lineage(spark, tmp_path):
             shrunk.withColumn("dt", F.to_date("warc_ts"))
         )
     }
-    done = completed_partitions(root, "t1m", None, crcs)
+    done = completed_partitions(root, "t1m", crcs)
     assert victim not in done
     assert set(done) == set(dts) - {victim}
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -331,6 +332,47 @@ def test_read_points_prunes_dt_partitions(spark, block_store):
     assert out.rdd.getNumPartitions() == 1
     ref = GO.read_points(blocks.drop("dt"), t0=t0, t1=t0 + 86399)
     assert ref.rdd.getNumPartitions() == n_days == 3
+
+
+def _node_inputs(plan: str, node: str, marker: str = "") -> list[list[str]]:
+    """Input column names of every ``node`` in a formatted plan whose
+    details mention ``marker``."""
+    out = []
+    for block in plan.split("\n\n"):
+        lines = block.strip().splitlines()
+        if not lines or not re.match(rf"\(\d+\) {node}\b", lines[0]):
+            continue
+        if marker not in block:
+            continue
+        inputs = next(l for l in lines if l.startswith("Input ["))
+        cols = inputs.split(": ", 1)[1].strip("[]").split(", ")
+        out.append([c.split("#")[0] for c in cols])
+    return out
+
+
+def test_t1m_salted_exchange_carries_points_not_text(spark):
+    """The t1m stage salts the projected (url, ts, value) points: the
+    page text and html never cross its salted exchange."""
+    from spartan2_spark.datagen import ensure_pages
+    from spartan2_spark.plans.pipeline import build_t1m
+
+    pages = ensure_pages(spark, os.path.join(REPO, ".cache"), 20_000)
+    salted = _node_inputs(plan_of(build_t1m(pages)), "Exchange", "REPARTITION_BY_COL")
+    assert salted, "no salted exchange in the t1m plan"
+    for cols in salted:
+        assert "text" not in cols and "html" not in cols, cols
+
+
+def test_decode_blocks_ships_only_the_kernel_columns(spark, block_store):
+    """A one-day read hands the decode kernel exactly the six columns it
+    reads; start_ts, end_ts and dt stay on the JVM side."""
+    from spartan2_spark.operators import gorilla as GO
+
+    blocks = spark.read.parquet(block_store)
+    lo = blocks.agg({"start_ts": "min"}).first()[0]
+    t0 = (lo // 86400 + 1) * 86400
+    inputs = _node_inputs(plan_of(GO.read_points(blocks, t0=t0, t1=t0 + 86399)), "MapInPandas")
+    assert inputs == [["url", "tier", "n_points", "ts_block", "val_block", "crc32"]]
 
 
 def test_late_repair_bounds_broadcast_and_single_agg(spark, sf_dir):
