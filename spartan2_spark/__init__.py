@@ -16,6 +16,10 @@ Spark DataFrame / SQL / Arrow-vectorized pipelines:
 
 No per-row Python anywhere on the hot path: every stage is built-in
 column expressions, window functions, or Arrow-batched pandas UDFs.
+
+This file imports nothing: ``python -m spartan2_spark.pyworker`` loads the
+package before it settles ``sys.path``, and must not import ``pyspark``
+from Spark's archives first.
 """
 
 __version__ = "0.1.0"

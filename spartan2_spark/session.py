@@ -14,10 +14,11 @@ On a real cluster the same factory is used via ``spark-submit
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_all", "default_driver_memory"]
+__all__ = ["get_spark", "stop_all", "default_driver_memory", "unpacked_daemon"]
 
 
 def default_driver_memory() -> str:
@@ -28,6 +29,28 @@ def default_driver_memory() -> str:
     killed by the kernel instead of spilling."""
     phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
     return f"{min(48 << 10, phys_mb // 2)}m"
+
+
+def unpacked_daemon(
+    master: str, package_dir: str, cwd: str, pythonpath: str, site_dirs: list[str]
+) -> bool:
+    """Whether Python workers can start from ``spartan2_spark.pyworker``,
+    which imports PySpark from its unpacked install (see that module).
+
+    The daemon starts before any task, so the package must be importable
+    from the worker's own path: a local master, whose workers share the
+    driver's cwd and environment, and a package that is a directory (not
+    inside a ``--py-files`` zip) whose parent is the cwd, a ``PYTHONPATH``
+    entry or a site-packages directory. Otherwise Spark's default daemon
+    runs.
+    """
+    if master != "local" and not master.startswith("local["):
+        return False
+    if not os.path.isdir(package_dir):
+        return False
+    roots = [cwd, *pythonpath.split(os.pathsep), *site_dirs]
+    parent = os.path.realpath(os.path.dirname(package_dir))
+    return parent in {os.path.realpath(r) for r in roots if r}
 
 
 def get_spark(
@@ -117,6 +140,14 @@ def get_spark(
                 use_tmpfs = False
     if use_tmpfs:
         builder = builder.config("spark.local.dir", "/dev/shm/spark_graft_local")
+    if unpacked_daemon(
+        master,
+        os.path.dirname(os.path.abspath(__file__)),
+        os.getcwd(),
+        os.environ.get("PYTHONPATH", ""),
+        site.getsitepackages(),
+    ):
+        builder = builder.config("spark.python.daemon.module", "spartan2_spark.pyworker")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
